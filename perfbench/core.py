@@ -115,20 +115,6 @@ def fresh_dir(path: str) -> str:
     return path
 
 
-def scratch_entries_before(root: str, t0: float) -> list[str]:
-    """Entries under the scratch root older than ``t0`` (epoch s)."""
-    old = []
-    for d, dirs, files in os.walk(root):
-        for n in dirs + files:
-            p = os.path.join(d, n)
-            try:
-                if os.lstat(p).st_mtime < t0:
-                    old.append(p)
-            except OSError:
-                pass
-    return old
-
-
 # ---------------------------------------------------------------- Spark
 
 
@@ -142,8 +128,12 @@ def start_spark(work: str, cores: int, event_log_dir: str | None):
         "spark.driver.memory": "2g",
         "spark.local.dir": os.path.join(work, "spark-local"),
         "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
-        # no hsperfdata file in the system /tmp
-        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData",
+        # no hsperfdata file in the system /tmp; the heap is committed
+        # and touched up front, so peak RSS does not follow how far the
+        # collector happened to grow it
+        "spark.driver.extraJavaOptions": (
+            f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData -Xms2g -XX:+AlwaysPreTouch"
+        ),
     }
     if event_log_dir:
         # Spark 4.1 defaults would write a compressed rolling directory
@@ -259,7 +249,8 @@ class Oracle:
         self.cmp = load_check_oracle(root)
         self.sql = self.cmp.entry_mod.oracle_sql()
         self.con = duckdb.connect()
-        self.con.execute("SET threads TO 2")
+        # the twins run between ops, while Spark is idle
+        self.con.execute(f"SET threads TO {len(os.sched_getaffinity(0))}")
         self.con.execute(f"SET temp_directory = '{tempfile.gettempdir()}'")
         self.use_dir(data_dir, tables)
 

@@ -7,7 +7,8 @@ with one row group like the testdata. One unit is one shard:
 ``ext.dedup.minhash_candidate_pairs`` and ``ext.text.text_quality``,
 each collected, and a read-back of the corpus table. The near-dup edge
 table is built inside every shard's corpus build: the scratch root is
-empty when the run starts.
+empty when the run starts, and each build must leave one new
+``ngram_pairs_*`` entry there.
 """
 
 from __future__ import annotations
@@ -17,7 +18,20 @@ import os
 import gen
 from core import Footprint, Oracle
 
-N_SHARDS = 16  # shards generated; a run builds 1 + round(--seconds / unit_s)
+# the DuckDB minhash twin that checks the cold shard grows faster than
+# linearly with shard size; 500 docs keep it to a few seconds
+DOCS_PER_SHARD = 500
+
+
+def _edge_tables() -> set[str]:
+    """The committed n-gram pair tables in the package scratch root."""
+    from databricks_data_warehouse_spark.streaming.windows import _scratch_root
+
+    root = _scratch_root()
+    return {
+        n for n in os.listdir(root)
+        if n.startswith("ngram_pairs_") and os.path.exists(os.path.join(root, n, "_SUCCESS"))
+    }
 
 
 class CorpusPrep:
@@ -33,16 +47,12 @@ class CorpusPrep:
         self.pairs_passing = 0  # ngram pairs at or above the threshold
         self.tables = {}
 
-    @property
-    def max_units(self) -> int:
-        return len(self.shards)
-
-    def generate(self, rep: int) -> None:
+    def generate(self, rep: int, n_units: int) -> None:
         self.shards = gen.corpus_shards(
-            self.seed, os.path.join(self.work, f"shards_{rep}"), N_SHARDS
+            self.seed, os.path.join(self.work, f"shards_{rep}"), n_units, DOCS_PER_SHARD
         )
 
-    def prepare(self, rep: int, ops) -> None:
+    def prepare(self, ops) -> None:
         pass
 
     def after_setup(self) -> None:
@@ -51,10 +61,13 @@ class CorpusPrep:
         self.oracle = Oracle(self.root, self.shards[0].dir, ["documents"])
 
     def unit(self, ops) -> float:
+        """One shard; returns its op seconds."""
         from databricks_data_warehouse_spark import pipelines as P
         from databricks_data_warehouse_spark.ext import dedup, text
 
         shard = self.shards[ops.unit]
+        start = len(ops.records)
+        edges_before = _edge_tables()
         self.oracle.use_dir(shard.dir, ["documents"])
         loc = os.path.join(self.tables_dir, f"training_corpus_{shard.index:03d}")
 
@@ -71,7 +84,9 @@ class CorpusPrep:
             lambda: P.build_training_corpus(self.spark, shard.dir, loc),
             check_counts, rows=shard.docs,
         )
-        landed = ops.records[-1].seconds
+        new = _edge_tables() - edges_before
+        ops.check("ngram_pairs_built", None if len(new) == 1 else
+                  f"{len(new)} new ngram_pairs_* entries in the scratch root, not 1")
         self.tables[shard.index] = table
         self.footprint.scan()
         self.user_bytes += shard.bytes
@@ -100,7 +115,7 @@ class CorpusPrep:
         got = pairs.collect()
         ops.check("ngram_pairs", self._compare(ops, "dedup_ngram_jaccard", got, pairs.columns))
         self.pairs_passing += len(got)
-        return landed
+        return sum(r.seconds for r in ops.records[start:])
 
     def _compare(self, ops, twin, rows, columns):
         """The DuckDB twins cost seconds per shard, so answers are

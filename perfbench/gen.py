@@ -7,9 +7,9 @@ table, the layout of the repository's testdata. Nothing here touches Spark.
 - ``star``: the TPC-H-shaped star that ``queries.*`` functions read, in
   the sf0.1 shape of the testdata (15k customers, 150k orders, ~600k
   lineitem, ~14 MB of parquet).
-- ``medallion_batches``: dirty micro-batches of the five reference
-  entities (FIXTURES.md section A) plus the ground truth of what silver
-  must hold after each batch.
+- ``medallion_batches``: dirty customer micro-batches (FIXTURES.md
+  section A) and a nations dimension, plus the ground truth of what
+  silver must hold after each batch.
 - ``corpus_shards``: document shards with the testdata vocabulary,
   lang/source mix and a stated near-duplicate share, plus embeddings.
 """
@@ -42,6 +42,24 @@ def _days(rng: np.random.Generator, start: str, end: str, n: int) -> np.ndarray:
 def _cents(rng: np.random.Generator, lo: int, hi: int, n: int) -> np.ndarray:
     """Exactly-2dp doubles (the testdata money columns are all 2dp)."""
     return rng.integers(lo, hi + 1, n) / 100.0
+
+
+def _exact(rng: np.random.Generator, n: int, share: float) -> np.ndarray:
+    """A mask with exactly round(n * share) rows set, at seeded places:
+    every seed carries the same amount of each kind of row, so runs at
+    different seeds do the same work."""
+    mask = np.zeros(n, dtype=bool)
+    mask[rng.choice(n, int(round(n * share)), replace=False)] = True
+    return mask
+
+
+def _spread(rng: np.random.Generator, values, n: int, p=None) -> np.ndarray:
+    """``n`` draws of ``values`` in exact proportions ``p`` (default
+    equal), shuffled."""
+    p = np.full(len(values), 1 / len(values)) if p is None else np.asarray(p)
+    counts = np.floor(p * n).astype(int)
+    counts[: n - counts.sum()] += 1  # the remainder, one each from the first
+    return rng.permutation(np.repeat(np.asarray(values), counts))
 
 
 def content_hash(path: str) -> str:
@@ -151,22 +169,16 @@ def star(seed: int, out_dir: str, n_orders: int = 150_000) -> dict[str, int]:
 
 # --------------------------------------------------- medallion micro-batches
 
-# Dirt shares of each batch (FIXTURES.md section A). Every share is of
-# the entity's NEW rows in the batch; updates are extra rows on keys
-# that landed clean in an earlier batch.
+# Dirt shares of each customer batch (FIXTURES.md section A). Every share
+# is of the batch's NEW rows; updates are extra rows on keys that landed
+# clean in an earlier batch.
 SHARES = {
     "customer_recoverable": 0.10,  # " automobile ", "Machinery " ...: the DLQ cleanse fixes them
     "customer_dead_domain": 0.03,  # segment outside the domain: never recovers
-    "exact_duplicate": 0.02,       # the same row twice in one batch (customers, order_details)
-    "order_fk_orphan": 0.04,       # customer id with no parent
-    "order_bad_status": 0.04,      # 'P' outside {O, F}
-    "detail_fk_orphan": 0.03,      # order id with no parent
-    "detail_bad_quantity": 0.02,   # non-numeric quantity string
+    "exact_duplicate": 0.02,       # the same row twice in one batch
     "update": 0.05,                # a changed row for a key already in silver
 }
-ORDER_STATUSES = ["O", "F"]
-# only "Us" is valid; addresses have no DLQ cleanse, so "us"/"USA" stay dead
-_COUNTRIES = ["Us", "us", "USA"]
+N_NATIONS = 25
 
 
 @dataclass
@@ -179,7 +191,6 @@ class MedallionBatch:
     rows: dict[str, int]
     bytes: int
     silver_keys: dict[str, set] = field(default_factory=dict)
-    new_valid_orders: int = 0
 
 
 def _ts(day0: np.datetime64, rng: np.random.Generator, n: int) -> np.ndarray:
@@ -187,26 +198,19 @@ def _ts(day0: np.datetime64, rng: np.random.Generator, n: int) -> np.ndarray:
 
 
 def medallion_batches(
-    seed: int,
-    out_dir: str,
-    n_batches: int,
-    customers_per_batch: int = 400,
-    orders_per_batch: int = 1_200,
+    seed: int, out_dir: str, n_batches: int, customers_per_batch: int = 400
 ) -> list[MedallionBatch]:
     """Write ``n_batches`` batch directories under ``out_dir``.
 
-    Batch 0 is the initial load of all five entities; every later batch
-    lands new and updated customers, orders and order details (addresses
-    and items are the slowly changing dimensions and arrive once). The
+    Batch 0 also carries ``nations``, the clean reference dimension that
+    customers point to; every batch lands new and updated customers. The
     returned ground truth is cumulative: ``silver_keys[e]`` is the key
     set silver must hold after that batch."""
     rng = np.random.default_rng([seed, 2])
     os.makedirs(out_dir, exist_ok=True)
-    n_addr, n_items = 50, 500
-    silver = {e: set() for e in ("customers", "addresses", "items", "orders", "order_details")}
-    # clean keys from earlier batches that may still take their one update
-    updatable = {"customers": [], "orders": []}
-    next_cust = next_order = 0
+    silver = {"customers": set(), "nations": set(range(N_NATIONS))}
+    updatable: list[int] = []  # clean keys that may still take their one update
+    next_cust = 0
     batches = []
     base_day = np.datetime64("2024-01-01T00:00:00", "s")
     for b in range(n_batches):
@@ -216,55 +220,39 @@ def medallion_batches(
         tables: dict[str, pa.Table] = {}
 
         if b == 0:
-            country = np.array(_COUNTRIES)[rng.choice(3, n_addr, p=[0.9, 0.05, 0.05])]
-            tables["addresses"] = pa.table({
-                "a_id": np.arange(n_addr, dtype=np.int64),
-                "city": [f"city {i}" for i in range(n_addr)],
-                "country": country,
-                "created_on": _ts(day0, rng, n_addr),
+            tables["nations"] = pa.table({
+                "n_nationkey": np.arange(N_NATIONS, dtype=np.int64),
+                "n_name": [f"NATION {i:02d}" for i in range(N_NATIONS)],
+                "created_on": _ts(day0, rng, N_NATIONS),
             })
-            silver["addresses"] = {i for i in range(n_addr) if country[i] == "Us"}
-            price = rng.integers(100, 100_000, n_items).astype(str).astype(object)
-            bad = rng.random(n_items) < 0.02
-            price[bad] = "n/a"
-            tables["items"] = pa.table({
-                "i_id": np.arange(n_items, dtype=np.int64),
-                "code": [f"I-{i:05d}" for i in range(n_items)],
-                "price_cents": price.astype(str),
-                "created_on": _ts(day0, rng, n_items),
-            })
-            silver["items"] = {i for i in range(n_items) if not bad[i]}
 
-        # ---- customers: new keys, dirt, duplicates, updates
         n = customers_per_batch
         keys = np.arange(next_cust, next_cust + n, dtype=np.int64)
         next_cust += n
-        seg = np.array(SEGMENTS)[rng.integers(0, 5, n)].astype(object)
-        kind = rng.random(n)
-        recov = kind < SHARES["customer_recoverable"]
-        dead = (kind >= SHARES["customer_recoverable"]) & (
-            kind < SHARES["customer_recoverable"] + SHARES["customer_dead_domain"]
-        )
+        seg = _spread(rng, SEGMENTS, n).astype(object)
+        kind = rng.permutation(n)
+        n_recov = int(round(n * SHARES["customer_recoverable"]))
+        n_dead = int(round(n * SHARES["customer_dead_domain"]))
+        recov = kind < n_recov
+        dead = (kind >= n_recov) & (kind < n_recov + n_dead)
         seg[recov] = [f"  {s.lower()} " for s in seg[recov]]
         seg[dead] = "UNKNOWN"
         cust = {
             "c_custkey": keys,
             "c_name": np.array([f"Customer#{k:09d}" for k in keys], dtype=object),
-            "c_nationkey": rng.integers(0, 25, n).astype(np.int64),
+            "c_nationkey": rng.integers(0, N_NATIONS, n).astype(np.int64),
             "c_mktsegment": seg,
             "created_on": _ts(day0, rng, n),
         }
-        dup = rng.random(n) < SHARES["exact_duplicate"]
+        dup = _exact(rng, n, SHARES["exact_duplicate"])
         clean = ~dup & ~dead
         silver["customers"] |= set(keys[clean].tolist())
         fresh_clean = keys[clean & ~recov].tolist()
-        n_upd = int(round(n * SHARES["update"])) if updatable["customers"] else 0
-        upd = set(rng.choice(len(updatable["customers"]), n_upd, replace=False).tolist()
+        n_upd = int(round(n * SHARES["update"])) if updatable else 0
+        upd = set(rng.choice(len(updatable), n_upd, replace=False).tolist()
                   if n_upd else [])
-        upd_keys = np.array([updatable["customers"][i] for i in sorted(upd)], dtype=np.int64)
-        updatable["customers"] = [
-            k for i, k in enumerate(updatable["customers"]) if i not in upd
-        ] + fresh_clean
+        upd_keys = np.array([updatable[i] for i in sorted(upd)], dtype=np.int64)
+        updatable = [k for i, k in enumerate(updatable) if i not in upd] + fresh_clean
         order = np.concatenate([np.arange(n), np.flatnonzero(dup)])
         parts = {c: v[order] for c, v in cust.items()}
         if len(upd_keys):
@@ -280,86 +268,13 @@ def medallion_batches(
             "created_on": parts["created_on"].astype("datetime64[us]"),
         })
 
-        # ---- orders: parents are this and earlier batches' customers
-        n = orders_per_batch
-        okeys = np.arange(next_order, next_order + n, dtype=np.int64)
-        next_order += n
-        parent_pool = np.arange(next_cust, dtype=np.int64)
-        ocust = rng.choice(parent_pool, n)
-        orphan = rng.random(n) < SHARES["order_fk_orphan"]
-        ocust[orphan] = -1 - rng.integers(0, 1_000_000, orphan.sum())
-        status = np.array(ORDER_STATUSES)[rng.integers(0, 2, n)].astype(object)
-        bad_status = rng.random(n) < SHARES["order_bad_status"]
-        status[bad_status] = "P"
-        oaddr = rng.integers(0, n_addr, n).astype(np.int64)
-        valid_o = (
-            ~orphan
-            & ~bad_status
-            & np.isin(ocust, list(silver["customers"]))
-            & np.isin(oaddr, list(silver["addresses"]))
-        )
-        silver["orders"] |= set(okeys[valid_o].tolist())
-        n_upd = int(round(n * SHARES["update"])) if updatable["orders"] else 0
-        upd = set(rng.choice(len(updatable["orders"]), n_upd, replace=False).tolist()
-                  if n_upd else [])
-        upd_rows = [updatable["orders"][i] for i in sorted(upd)]
-        updatable["orders"] = [
-            r for i, r in enumerate(updatable["orders"]) if i not in upd
-        ] + [
-            (int(k), int(c), int(a), s)
-            for k, c, a, s, v in zip(okeys, ocust, oaddr, status, valid_o)
-            if v
-        ]
-        created = _ts(day0, rng, n)
-        tables["orders"] = pa.table({
-            "o_orderkey": np.concatenate([okeys, [r[0] for r in upd_rows]]).astype(np.int64),
-            "customer_id": np.concatenate([ocust, [r[1] for r in upd_rows]]).astype(np.int64),
-            "address_id": np.concatenate([oaddr, [r[2] for r in upd_rows]]).astype(np.int64),
-            "o_status": np.concatenate(
-                [status, ["F" if r[3] == "O" else "O" for r in upd_rows]]
-            ).astype(str),
-            "created_on": np.concatenate(
-                [created, _ts(day0, rng, len(upd_rows))]
-            ).astype("datetime64[us]"),
-        })
-        new_valid_orders = int(valid_o.sum())
-
-        # ---- order details: 1-4 lines per order of this batch
-        lines = rng.integers(1, 5, n)
-        d_order = np.repeat(okeys, lines)
-        d_line = np.concatenate([np.arange(1, k + 1) for k in lines]).astype(np.int64)
-        m = len(d_order)
-        d_item = rng.integers(0, n_items, m).astype(np.int64)
-        d_orphan = rng.random(m) < SHARES["detail_fk_orphan"]
-        d_order = d_order.copy()
-        d_order[d_orphan] = -1 - np.arange(m)[d_orphan] - 1_000_000 * b
-        qty = rng.integers(1, 51, m).astype(str).astype(object)
-        d_bad = rng.random(m) < SHARES["detail_bad_quantity"]
-        qty[d_bad] = "x" + qty[d_bad]
-        d_dup = rng.random(m) < SHARES["exact_duplicate"]
-        d_created = _ts(day0, rng, m)
-        valid_d = (
-            ~d_bad & ~d_dup & np.isin(d_order, list(silver["orders"]))
-            & np.isin(d_item, list(silver["items"]))
-        )
-        silver["order_details"] |= set(zip(d_order[valid_d].tolist(), d_line[valid_d].tolist()))
-        order = np.concatenate([np.arange(m), np.flatnonzero(d_dup)])
-        tables["order_details"] = pa.table({
-            "order_id": d_order[order],
-            "line_no": d_line[order],
-            "item_id": d_item[order],
-            "quantity": qty[order].astype(str),
-            "created_on": d_created[order].astype("datetime64[us]"),
-        })
-
         paths, rows, nbytes = {}, {}, 0
         for name, table in tables.items():
             p = os.path.join(bdir, f"{name}.parquet")
             nbytes += _write(table, p)
             paths[name], rows[name] = p, table.num_rows
         batches.append(MedallionBatch(
-            b, paths, rows, nbytes,
-            {e: set(s) for e, s in silver.items()}, new_valid_orders,
+            b, paths, rows, nbytes, {e: set(s) for e, s in silver.items()}
         ))
     return batches
 
@@ -371,7 +286,7 @@ def _customer_update(col, keys, rng, day0):
     if col == "c_name":
         return np.array([f"Customer#{k:09d} (renamed)" for k in keys], dtype=object)
     if col == "c_nationkey":
-        return rng.integers(0, 25, n).astype(np.int64)
+        return rng.integers(0, N_NATIONS, n).astype(np.int64)
     if col == "c_mktsegment":
         return np.array(SEGMENTS, dtype=object)[rng.integers(0, 5, n)]
     return _ts(day0, rng, n)
@@ -409,17 +324,23 @@ def corpus_shards(
     for s in range(n_shards):
         n = docs_per_shard
         ids = np.arange(s * n, (s + 1) * n, dtype=np.int64)
-        lang = np.array(_LANGS)[rng.choice(5, n, p=_LANG_P)]
-        source = np.array([f"src{i}" for i in range(20)])[rng.integers(0, 20, n)]
-        lengths = rng.integers(10, 101, n)
+        lang = _spread(rng, _LANGS, n, _LANG_P)
+        source = _spread(rng, [f"src{i}" for i in range(20)], n)
+        lengths = rng.permutation(np.linspace(10, 100, n).round().astype(int))
         words = np.array(_VOCAB)[rng.integers(0, len(_VOCAB), int(lengths.sum()))]
         cuts = np.concatenate([[0], np.cumsum(lengths)])
         text = [" ".join(words[cuts[i]:cuts[i + 1]]) for i in range(n)]
+        # exactly NEAR_DUP_SHARE of the docs copy an earlier doc of their
+        # (lang, source) block
+        block = np.char.add(lang.astype(str), source.astype(str))
+        _, first = np.unique(block, return_index=True)
+        can_copy = np.ones(n, dtype=bool)
+        can_copy[first] = False
+        picks = rng.choice(np.flatnonzero(can_copy), int(round(n * NEAR_DUP_SHARE)),
+                           replace=False)
         near = 0
-        for i in np.flatnonzero(rng.random(n) < NEAR_DUP_SHARE):
-            same = np.flatnonzero((lang[:i] == lang[i]) & (source[:i] == source[i]))
-            if len(same) == 0:
-                continue
+        for i in np.sort(picks):
+            same = np.flatnonzero(block[:i] == block[i])
             toks = text[rng.choice(same)].split()
             j = rng.integers(0, len(toks))
             toks[j] = _VOCAB[rng.integers(0, len(_VOCAB))]  # one-word edit

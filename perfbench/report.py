@@ -4,6 +4,7 @@ records, per-layer metrics from a traced run's spans and event log."""
 from __future__ import annotations
 
 import statistics
+from collections import defaultdict
 
 from spans import clip, jobs_by_span, mean, percentile, self_time, union_length
 
@@ -42,33 +43,55 @@ def install_wrappers(tracer) -> None:
     tracer.wrap("ext.text_quality", [(text, "text_quality")])
 
 
+def kind_medians(records) -> list[float]:
+    """Each op kind's median latency: a kind's slow outlier moves only
+    its own median, and kinds with many samples weigh no more than rare
+    ones."""
+    by_name = defaultdict(list)
+    for r in records:
+        by_name[r.name].append(r.seconds)
+    return [statistics.median(v) for v in by_name.values()]
+
+
+def unit_rates(records, n_units: int) -> list[tuple[float, float]]:
+    """(ops/s, input rows/s) of each warm unit, over its op seconds."""
+    rates = []
+    for u in range(1, n_units):
+        recs = [r for r in records if r.unit == u]
+        busy = sum(r.seconds for r in recs)
+        rates.append((len(recs) / busy, sum(r.rows for r in recs) / busy))
+    return rates
+
+
 def end_to_end(ops, units: list[float], setup_s: float, footprint_bytes: int,
                user_bytes: int, peak_rss_mb: float) -> tuple[dict, dict]:
     """The end-to-end metrics, and the sample counts behind them.
 
     Unit 0 is the cold pass; every other figure comes from the warm
     units after it. bi_read commits only in set-up, so its write
-    samples are the set-up builds."""
+    sample is the set-up build."""
     warm = [r for r in ops.records if r.unit >= 1]
-    reads = [r.seconds for r in warm if r.kind == "read"]
-    writes = [r.seconds for r in warm if r.kind == "write"] or [
-        r.seconds for r in ops.records if r.unit < 0 and r.kind == "write"
+    reads = [r for r in warm if r.kind == "read"]
+    writes = [r for r in warm if r.kind == "write"] or [
+        r for r in ops.records if r.unit < 0 and r.kind == "write"
     ]
-    busy = sum(r.seconds for r in warm)
+    rates = unit_rates(ops.records, len(units))
     metrics = {
         "setup_s": setup_s,
         "cold_pass_s": units[0],
-        "read_p50_s": statistics.median(reads),
-        "write_p50_s": statistics.median(writes),
+        # a mean over op kinds of each kind's median: a pooled median
+        # would land on whichever kind sits in the middle of the mix
+        "read_mean_s": mean(kind_medians(reads)),
+        "write_mean_s": mean(kind_medians(writes)),
         "batch_p50_s": statistics.median(units[1:]),
-        "ops_per_s": len(warm) / busy,
-        "rows_per_s": sum(r.rows for r in warm) / busy,
+        "ops_per_s": statistics.median(r[0] for r in rates),
+        "rows_per_s": statistics.median(r[1] for r in rates),
         "bytes_written_per_user_byte": footprint_bytes / user_bytes,
         "peak_rss_mb": peak_rss_mb,
     }
     samples = {
-        "read": (len(reads), percentile(reads, 90)),
-        "write": (len(writes), percentile(writes, 90)),
+        "read": (len(reads), percentile([r.seconds for r in reads], 90)),
+        "write": (len(writes), percentile([r.seconds for r in writes], 90)),
         "batch": (len(units) - 1, percentile(units[1:], 90)),
     }
     return metrics, samples
@@ -174,6 +197,8 @@ def per_layer(tracer, log, ops, wl, cores: int, counts: dict) -> dict:
     m["spark.shuffle_read_mb"] = sum(s.shuffle_read_bytes for s in w_stages) / MB / n_ops
     m["spark.shuffle_write_mb"] = sum(s.shuffle_write_bytes for s in w_stages) / MB / n_ops
     m["spark.spill_mb"] = sum(s.spill_bytes for s in w_stages) / MB / n_ops
-    m["trace.ops_per_s"] = len(warm_ops) / busy if busy else 0.0
+    # computed as the untraced ops_per_s is: their ratio is the overhead
+    m["trace.ops_per_s"] = statistics.median(
+        r[0] for r in unit_rates(ops.records, counts["warm_units"] + 1))
     m["host.canary_s"] = counts["canary_s"]
     return m

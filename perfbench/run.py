@@ -1,6 +1,6 @@
 """Lakehouse benchmark: one workload, one seed, one run.
 
-    python3 perfbench/run.py --workload bi_read --seed 1 --seconds 15 --trace 0
+    python3 perfbench/run.py --workload bi_read --seed 1 --seconds 10 --trace 0
 
 Run it from the repository root. Each workload is one client in a
 closed loop (no think time) on ``local[<usable cores>]``:
@@ -9,12 +9,12 @@ closed loop (no think time) on ``local[<usable cores>]``:
 - ``etl_medallion``  dirty micro-batches through bronze, silver, DLQ, gold;
 - ``corpus_prep``    document shards through the training-corpus build.
 
-A run generates its inputs from the seed, sets up (three times, the
-median counts), runs one cold unit (a pass, a batch or a shard) in the
-fresh session with an empty scratch root, then ``--seconds`` worth of
-warm units: ``--seconds`` divided by the workload's nominal unit time
-on a 4-core host, so every commit measures the same work. Every answer
-is checked. The last stdout
+A run generates its inputs from the seed (three times, the median
+counts), prepares its tables once, runs one cold unit (a pass, a batch
+or a shard) in the fresh session with an empty scratch root, then
+``--seconds`` worth of warm units: ``--seconds`` divided by the
+workload's nominal unit time on a 4-core host, at least two, so every
+commit measures the same work. Every answer is checked. The last stdout
 line is one JSON object: ``correct``, ``attempted``, ``failed`` and the
 end-to-end metrics (``--trace 0``) or the per-layer metrics from spans
 and the Spark event log (``--trace 1``).
@@ -35,7 +35,7 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
 
 WORK_DIR = ".perfbench_work"
-SETUP_REPS = 3
+GEN_REPS = 3
 
 
 def workload_class(name: str):
@@ -61,12 +61,10 @@ def canary_s(spark, cores: int) -> float:
 
 
 def run(args, root: str, work: str) -> dict:
-    from core import (Ops, OpFailed, fresh_dir, scratch_entries_before, start_spark,
-                      stop_spark, tree_peak_rss_mb)
+    from core import Ops, OpFailed, fresh_dir, start_spark, stop_spark, tree_peak_rss_mb
     from report import end_to_end, install_wrappers, per_layer
     from spans import Tracer, parse_event_log
 
-    t_start = time.time()
     marks = [("start", time.perf_counter())]
     cores = len(os.sched_getaffinity(0))
     from databricks_data_warehouse_spark.streaming import windows
@@ -86,17 +84,22 @@ def run(args, root: str, work: str) -> dict:
     counts = {"session_start_s": session_s}
     wl = workload_class(args.workload)(spark, work, args.seed, root)
     units: list[float] = []
+    # a fixed amount of warm work, not a time limit: a faster commit
+    # must not run more (and warmer) units than its parent; two at
+    # least, so no warm figure rests on a single unit
+    n_warm = max(2, round(args.seconds / wl.unit_s))
     try:
         ops.unit = -1
-        gen_s, setup_reps = [], []
-        for rep in range(SETUP_REPS):
+        gen_s = []
+        for rep in range(GEN_REPS):
             t0 = time.perf_counter()
-            wl.generate(rep)
-            t1 = time.perf_counter()
-            wl.prepare(rep, ops)
-            gen_s.append(t1 - t0)
-            setup_reps.append(time.perf_counter() - t0)
-        setup_s = session_s + statistics.median(setup_reps)
+            wl.generate(rep, 1 + n_warm)
+            gen_s.append(time.perf_counter() - t0)
+        # the tables are prepared once: a second build would run warm,
+        # which no fresh session's set-up does
+        t0 = time.perf_counter()
+        wl.prepare(ops)
+        setup_s = session_s + statistics.median(gen_s) + time.perf_counter() - t0
         marks.append(("setup", time.perf_counter()))
         counts["gen_inputs_s"] = statistics.median(gen_s)
         wl.after_setup()
@@ -104,17 +107,15 @@ def run(args, root: str, work: str) -> dict:
             tracer = Tracer(spark.sparkContext)
             install_wrappers(tracer)
             ops.tracer = tracer
-        old = scratch_entries_before(scratch, t_start)
-        ops.check("scratch_empty", f"{len(old)} stale scratch entries" if old else None)
+        # set-up built nothing the timed ops could reuse
+        left = os.listdir(scratch)
+        ops.check("scratch_empty", f"set-up left {left} in the scratch root" if left else None)
 
         marks.append(("after_setup", time.perf_counter()))
         ops.unit = 0
         units.append(wl.unit(ops))
         marks.append(("cold", time.perf_counter()))
         v0, f0, b0 = wl.table_versions(), len(wl.footprint.files), wl.footprint.bytes
-        # a fixed amount of warm work, not a time limit: a faster commit
-        # must not run more (and warmer) units than its parent
-        n_warm = max(1, min(wl.max_units - 1, round(args.seconds / wl.unit_s)))
         for _ in range(n_warm):
             ops.unit += 1
             units.append(wl.unit(ops))
@@ -127,8 +128,6 @@ def run(args, root: str, work: str) -> dict:
             warm_bytes=wl.footprint.bytes - b0,
         )
         wl.finish(ops)
-        old = scratch_entries_before(scratch, t_start)
-        ops.check("scratch_fresh", f"{len(old)} scratch entries predate the run" if old else None)
         if tracer is not None:
             tracer.unwrap()
             counts["live_files"] = wl.live_files()

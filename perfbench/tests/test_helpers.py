@@ -1,6 +1,7 @@
 """Unit tests for the benchmark's pure helpers: the percentile sample
-rule, interval union and span self time, span nesting, and the event-log
-parser on a small checked-in log."""
+rule, interval union and span self time, span nesting, the event-log
+parser on a small checked-in log, and the per-kind and per-unit medians
+behind the end-to-end metrics."""
 
 from __future__ import annotations
 
@@ -8,6 +9,8 @@ import os
 
 import pytest
 
+from core import OpRecord
+from report import kind_medians, unit_rates
 from spans import (Span, Tracer, clip, jobs_by_span, parse_event_log, percentile,
                    self_time, union_length)
 
@@ -95,3 +98,16 @@ def test_parse_event_log_attributes_jobs_stages_and_tasks():
     assert sum(st.shuffle_write_bytes for st in job1) > 0
     assert sum(st.shuffle_read_records for st in job1) == 4
     assert all(st.run_s >= 0 and st.cpu_s >= 0 and st.end >= st.start for st in ran.values())
+
+
+def test_kind_medians_take_each_kind_apart():
+    recs = [OpRecord("read", "q1", t, 1, 0, None) for t in (1.0, 9.0, 2.0)]
+    recs += [OpRecord("read", "scan", t, 1, 0, None) for t in (0.1, 0.3)]
+    assert sorted(kind_medians(recs)) == pytest.approx([0.2, 2.0])
+
+
+def test_unit_rates_skip_the_cold_unit():
+    recs = [OpRecord("read", "q", 4.0, 0, 100, None),
+            OpRecord("read", "q", 1.0, 1, 10, None), OpRecord("write", "w", 1.0, 1, 30, None),
+            OpRecord("read", "q", 0.5, 2, 10, None)]
+    assert unit_rates(recs, 3) == [pytest.approx((1.0, 20.0)), pytest.approx((2.0, 20.0))]
