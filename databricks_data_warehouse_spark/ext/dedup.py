@@ -18,7 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..queries._util import load, rnd
+from ..queries._util import load, read_parquet, rnd
+from ..signature import source_signature
 from . import _ckpt
 from .text import tokens, word_ngrams
 
@@ -285,9 +286,11 @@ def ngram_jaccard_pairs_cached(
     max_df: int = _MAX_GRAM_DF,
 ) -> DataFrame:
     """:func:`ngram_jaccard_pairs` through a scratch-parquet cache
-    keyed on (corpus fingerprint, threshold, max_df). The pair join is
-    the registry's most expensive SHARED subcomputation — the
-    ``dedup_ngram_jaccard`` entry returns it directly and
+    keyed on (``source_signature`` of the corpus, threshold, max_df):
+    a same-size, same-mtime rewrite of the corpus still misses, as its
+    footer hash moves. The pair join is the registry's most expensive
+    SHARED subcomputation — the ``dedup_ngram_jaccard`` entry returns
+    it directly and
     ``graph_pagerank_docs`` consumes the identical edge set, so per
     bench rep it used to run twice (VERDICT r12 item 6). This is the
     bench-scale analogue of what a production pipeline does anyway:
@@ -304,17 +307,7 @@ def ngram_jaccard_pairs_cached(
 
     src = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
     try:
-        if os.path.isdir(src):
-            fp = str(
-                sorted(
-                    (n, os.stat(os.path.join(src, n)).st_mtime_ns,
-                     os.stat(os.path.join(src, n)).st_size)
-                    for n in os.listdir(src)
-                )
-            )
-        else:
-            st = os.stat(src)
-            fp = f"{src}:{st.st_mtime_ns}:{st.st_size}"
+        fp = source_signature(src)
     except OSError:
         fp = src
     # the key carries the IMPLEMENTATION too (source hash of the pair
@@ -349,7 +342,7 @@ def ngram_jaccard_pairs_cached(
             shutil.rmtree(tmp, ignore_errors=True)
             if not os.path.exists(done):
                 raise  # a real build failure, not a lost rename race
-    return spark.read.parquet(final)
+    return read_parquet(spark, final)
 
 
 # Below this many (symmetrized) edges the component structure is
@@ -432,12 +425,14 @@ def connected_components(
     sym = sym.union(sym.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
     sym, sym_ids = _ckpt.local_checkpoint(sym)
     # sparse graphs (the near-dup norm) short-circuit to a driver
-    # union-find. The size guard and the edge fetch are ONE job
+    # union-find. The size guard and the edge fetch are one collect
     # (round 16): limit(MAX+1).collect() returns every edge when the
-    # graph is under the cap (and the collected prefix is simply
-    # discarded when it isn't) — previously a count job THEN a collect
-    # job over the same checkpointed blocks. A few MB at the cap,
-    # far under any driver limit.
+    # graph is under the cap — previously a count job THEN a collect
+    # job over the same checkpointed blocks. The collect is not one
+    # job: CollectLimit scans 1 partition, then scales up ×4 per job
+    # until it holds MAX+1 rows or has read every partition. Over the
+    # cap the path pays that collect too: MAX+1 edges (a few MB) reach
+    # the driver and are discarded before the distributed rounds.
     guard = sym.limit(_CC_DRIVER_MAX_EDGES + 1).collect()
     if len(guard) <= _CC_DRIVER_MAX_EDGES:
         node_type = sym.schema["a"].dataType

@@ -11,7 +11,12 @@ ready-to-train corpus table:
    pure function of doc_id;
 4. **persist** — ManagedTable partitioned by ``split`` (one output pass,
    each split is its own partition tree for downstream readers), with a
-   conservation assert: kept + rejected + deduped == corpus size.
+   conservation assert: rejected + deduped + the read-back row count of
+   the committed table == corpus size.
+
+Stages 1-2 meet in one cached per-document flag relation
+``(doc_id, keep, dup)``: the audit counts and the written rows both
+read it, so the corpus filter executes once per build.
 
 Scale notes: stages 1-3 are narrow or key-shuffled only (no all-pairs
 anywhere — the cluster stage inherits the blocked inverted-index join);
@@ -43,41 +48,53 @@ def build_training_corpus(
     docs = load(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "text"
     )
-    n_docs = docs.count()
-
-    decisions = corpus_filter(spark, sf_dir)
-    kept = docs.join(
-        decisions.where(F.col("keep")).select("doc_id"), "doc_id"
-    )
-
-    # non-canonical members of near-dup clusters drop out (anti-join on
-    # the loser set keeps the plan a single broadcast-able exclusion)
+    decisions = corpus_filter(spark, sf_dir).select("doc_id", "keep")
+    # non-canonical members of near-dup clusters drop out
     losers = (
         near_dup_clusters(spark, sf_dir, threshold=dedup_threshold)
         .where(~F.col("is_canonical"))
-        .select("doc_id")
+        .select("doc_id", F.lit(True).alias("dup"))
     )
-    deduped = kept.join(losers, "doc_id", "left_anti")
-
-    key = F.concat(F.lit("doc|"), F.col("doc_id").cast("string"))
-    final = deduped.withColumn(
-        "split", split_column(key, {"train": 0.8, "val": 0.1, "test": 0.1})
+    flags = (
+        docs.select("doc_id")
+        .join(decisions, "doc_id", "left")
+        .join(losers, "doc_id", "left")
+        .select(
+            "doc_id",
+            F.coalesce("keep", F.lit(False)).alias("keep"),
+            F.coalesce("dup", F.lit(False)).alias("dup"),
+        )
+        .cache()
     )
+    try:
+        survives = F.col("keep") & ~F.col("dup")
+        tally = flags.agg(
+            F.count("*").alias("docs"),
+            F.count_if("keep").alias("kept"),
+            F.count_if(survives).alias("final"),
+        ).first()
+        key = F.concat(F.lit("doc|"), F.col("doc_id").cast("string"))
+        final = docs.join(flags.where(survives).select("doc_id"), "doc_id").withColumn(
+            "split", split_column(key, {"train": 0.8, "val": 0.1, "test": 0.1})
+        )
 
-    table = ManagedTable(
-        spark,
-        "training_corpus",
-        table_location,
-        schema=final.schema,
-        partition_columns=["split"],
-    )
-    table.create_if_not_exists()
-    table.overwrite(final)
+        table = ManagedTable(
+            spark,
+            "training_corpus",
+            table_location,
+            schema=final.schema,
+            partition_columns=["split"],
+        )
+        table.create_if_not_exists()
+        table.overwrite(final)
+    finally:
+        flags.unpersist()
 
-    n_kept = kept.count()
+    n_docs = tally["docs"]
+    n_rejected = n_docs - tally["kept"]
+    n_dup_dropped = tally["kept"] - tally["final"]
+    # read back: the committed table must hold exactly the survivors
     n_final = table.read().count()
-    n_rejected = n_docs - n_kept
-    n_dup_dropped = n_kept - n_final
     if n_rejected + n_dup_dropped + n_final != n_docs:
         raise AssertionError(
             f"corpus conservation violated: {n_rejected} rejected + "

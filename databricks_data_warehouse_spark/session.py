@@ -7,6 +7,19 @@ for tests and on a multi-executor cluster unchanged:
 - AQE on (runtime re-plan: dynamic coalesce, skew-join splitting).
 - Arrow on (vectorized pandas_udf / toPandas transfer).
 - shuffle partitions sized by env, not hard-coded.
+- codegen cache sized to the working set. Spark keeps compiled
+  whole-stage classes in one JVM-wide LRU cache of
+  ``spark.sql.codegen.cache.maxEntries`` (default 100). Measured
+  distinct classes per warm unit of the perfbench workloads (4-core
+  host, ``CodegenMetrics``): a ``corpus_prep`` shard 142–145, an
+  ``etl_medallion`` batch 226–255, a ``bi_read`` pass 10. A working set
+  above 100 evicts every class before its next use, so each warm unit
+  recompiled all of them (1.5–2.7 s of Janino per unit).
+  ``CODEGEN_CACHE_ENTRIES`` = 1000 holds about four of the largest
+  working set (255), so a unit's classes survive the units of another
+  kind run between them (a whole ``etl_medallion`` run compiles ~330).
+  It is a static conf, so it binds only when this factory creates the
+  JVM's first session.
 """
 
 from __future__ import annotations
@@ -16,6 +29,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def get_spark(
@@ -46,6 +60,7 @@ def get_spark(
         # broadcast joins for dimension tables up to 64 MB.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # testdata events.parquet stores TIMESTAMP(NANOS) which Spark's
         # reader rejects; read as long and convert in the catalog layer.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -557,7 +557,7 @@ class ManagedTable:
         name: str,
         location: str,
         schema: StructType | None = None,
-        partition_columns: Sequence[str] = (),
+        partition_columns: Sequence[str] | None = None,
         sort_columns: Sequence[str] = (),
         cluster_by: Sequence[str] = (),
         retain_versions: int | None = None,
@@ -569,7 +569,8 @@ class ManagedTable:
         self.name = name
         self.location = location
         self.schema = schema
-        self.partition_columns = list(partition_columns)
+        # None: the committed layout of an existing table, else none
+        self.partition_columns = list(partition_columns or ())
         # clustering within files: rows sorted by these columns before
         # write, so parquet row-group min/max stats prune point/range
         # scans on them (the Z-order-lite that plain parquet offers)
@@ -610,6 +611,8 @@ class ManagedTable:
         # the set, and a data write racing a constraint change loses
         # the version claim and re-validates.
         v0 = self.current_version()
+        if partition_columns is None and v0 >= 0:
+            self.partition_columns = self._committed_partition_columns(v0) or []
         self.constraints: dict[str, str] = (
             self._read_constraints(v0) if v0 >= 0 else self._load_constraints()
         )
@@ -1677,6 +1680,38 @@ class ManagedTable:
                 "(vacuumed or never written)"
             )
         return dict(_load_manifest_json(path)["entries"])
+
+    def _committed_partition_columns(self, version: int) -> list[str] | None:
+        """Partition columns of the data committed at ``version``, read
+        from its manifest: an entry's base key lists the partition
+        values, and the last that many ``col=value`` dirs of its rel
+        name the columns. None when the version holds no entries or its
+        manifest is gone."""
+        path = self._manifest_path(version)
+        if not os.path.exists(path):
+            return None
+        for k, rel in _load_manifest_json(path)["entries"].items():
+            n = len(json.loads(_base_key(k)))
+            d = os.path.dirname(rel) if _rel_is_file(rel) else rel
+            segs = d.rstrip("/").split("/")[-n:] if n else []
+            return [unquote(seg.split("=", 1)[0]) for seg in segs]
+        return None
+
+    def _check_partition_layout(self, version: int) -> None:
+        """Refuse a write whose handle partitions differently from the
+        data committed at ``version``. Its staged entry keys never match
+        the committed ones: a scoped write carries every committed entry
+        over beside the rows it rewrote, and a whole-table MERGE by an
+        unpartitioned handle re-lays the table out so that the next
+        partitioned write duplicates every row. Only CREATE OR REPLACE
+        (a new table definition) may change the layout."""
+        committed = self._committed_partition_columns(version)
+        if committed is not None and committed != self.partition_columns:
+            raise ValueError(
+                f"table {self.name}: handle partition_columns "
+                f"{self.partition_columns} != committed layout {committed}; "
+                "open the table without partition_columns to adopt it"
+            )
 
     def _read_txn(self, version: int) -> dict[str, int]:
         """Writer-transaction watermarks of a manifest (Delta txnAppId
@@ -3328,6 +3363,8 @@ class ManagedTable:
             self.defaults = self._read_defaults(v_new - 1)
             self.cluster_by = self._read_cluster_by(v_new - 1)
             self.clustered_rels = self._read_clustered(v_new - 1)
+        if v_new > 0 and not reset_metadata:
+            self._check_partition_layout(v_new - 1)
         if copy_files_add:
             # two COPY INTOs racing on the same source files would load
             # rows twice; the ledger is the conflict detector (the
@@ -5383,6 +5420,7 @@ class ManagedTable:
         dv, dv_n = self._read_dv(v)
         if not dv:
             return v
+        self._check_partition_layout(v)
         if self.schema is None:
             self.schema = self._load_schema()
         cols = [f.name for f in self.schema.fields]
@@ -6375,14 +6413,6 @@ class ManagedTable:
                         shutil.rmtree(dirpath, ignore_errors=True)
 
     # ------------------------------------------------------------ partitions
-    def _source_partition_filter(self, source: DataFrame) -> Column | None:
-        """Predicate selecting the target partitions present in ``source``
-        (collected — partition tuples are low-cardinality by layout
-        design, the same assumption Delta makes when listing partitions).
-        Returns None when the source is empty."""
-        pf, _tuples = self._source_partitions(source)
-        return pf
-
     def _source_partitions(self, source: DataFrame):
         """(predicate, collected partition tuples) of ``source`` —
         the filter half feeds the scoped target scan, the tuples half
@@ -6944,6 +6974,8 @@ class ManagedTable:
             self._apply_functional_properties()
             self.defaults = self._read_defaults(v)
             self.identity = self._read_identity(v)
+            if append_df is not None:
+                self._check_partition_layout(v)
         doomed = doomed.select("__mt_key", "__mt_pos")
         per_file = {
             r["__mt_key"]: r["n"]

@@ -5,6 +5,8 @@ Customers.py → Silver-DLQ-Customers.py)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -180,6 +182,67 @@ def test_recovery_is_rerunnable(spark, pipeline_run):
     second = recover_dlq(spark, dlq, silver, bronze, **kwargs)
     assert first["silver"] == second["silver"] == 3
     assert first["still_invalid"] == second["still_invalid"] == 3
+
+
+def test_dlq_handle_without_partition_columns_does_not_duplicate(
+    spark, pipeline_run, tmp_path
+):
+    """recover_dlq given a DLQ handle opened without the DLQ's
+    partition_columns used to rewrite the DLQ under the unpartitioned
+    entry key; the next partitioned write then re-staged those rows
+    into their (year, month) entries beside it, duplicating every DLQ
+    row (4 rows + 1 new became 9)."""
+    bronze, silver, dlq, _ = pipeline_run
+    loc = str(tmp_path / "dlq_customers")
+    # the handle adopts the committed layout
+    assert dlq.partition_columns == ["year", "month"]
+    rules = [
+        TypeRule("id", "numeric"),
+        DomainRule("type", ["affiliate", "individual"]),
+        DomainRule("status", ["regular", "VIP"]),
+        TypeRule("created_on", "timestamp"),
+    ]
+    kwargs = dict(
+        id_columns=["id"],
+        silver_columns=["id", "type", "status", "created_on", "year", "month"],
+        dlq_key_columns=["id", "window_id", "unclean_type", "unclean_status"],
+        cleanse=_cleanse,
+        rules=rules,
+    )
+    recover_dlq(spark, dlq, silver, bronze, **kwargs)
+    assert dlq.read().count() == 4
+
+    # the next batch lands one more invalid row through the partitioned
+    # DLQ handle that validate_to_silver opens
+    raw = spark.createDataFrame(
+        [(6, "broker", "regular", "2024-02-04 09:00:00"),
+         (7, "individual", "VIP", "2024-01-07 09:00:00")],
+        RAW_SCHEMA,
+    ).withColumn("CreatedOn", F.col("CreatedOn").cast("timestamp"))
+    bronze = bronze_ingest(spark, raw, str(tmp_path / "bronze_customers"),
+                           "bronze_customers", timestamp_column="CreatedOn")
+    counts = validate_to_silver(
+        spark, bronze.read().where(F.col("id") >= 6), silver, loc,
+        "dlq_customers", id_columns=["id"],
+        ingestion_timestamp="bronze_ingestion_time",
+        rename_map={"Type": "type", "Status": "status", "CreatedOn": "created_on"},
+        rules=rules, silver_columns=kwargs["silver_columns"],
+        preserve_unclean=["type", "status"],
+    )
+    assert counts == {"batch": 2, "valid": 1, "invalid": 1}
+    assert dlq.read().count() == 5
+    again = recover_dlq(spark, dlq, silver, bronze, **kwargs)
+    assert again == {"bronze": 8, "silver": 4, "still_invalid": 4}
+
+    # a handle that names another layout is refused before it stages
+    data_dirs = sorted(os.listdir(os.path.join(loc, "data")))
+    flat = ManagedTable(spark, "dlq_customers", loc, partition_columns=[])
+    with pytest.raises(ValueError, match="committed layout"):
+        flat.append(dlq.read())
+    with pytest.raises(ValueError, match="committed layout"):
+        recover_dlq(spark, flat, silver, bronze, **kwargs)
+    assert sorted(os.listdir(os.path.join(loc, "data"))) == data_dirs
+    assert dlq.read().count() == 5
 
 
 def test_gold_build_upsert_and_conservation(spark, tmp_path):
