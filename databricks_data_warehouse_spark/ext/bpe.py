@@ -43,7 +43,6 @@ and whitespace-count upper bounds.
 
 from __future__ import annotations
 
-import os
 from collections import Counter
 
 import pandas as pd
@@ -51,6 +50,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..queries._util import load
+from ..scratch import inputs, scratch_table
 from ..sources.tables import ManagedTable
 from . import _ckpt
 from .text import tokens
@@ -283,20 +283,14 @@ def bpe_token_counts(
 def _merge_table(spark: SparkSession, sf_dir: str) -> ManagedTable:
     """The corpus's trained merge table, stored once per corpus in a
     ManagedTable (versioned tokenizer state)."""
-    from ..queries.managed_scan import _corpus_fingerprint
-    from ..sources.tables import ConcurrentWriteError
-    from ..streaming.windows import _scratch_root
 
-    h = _corpus_fingerprint(sf_dir)
-    loc = os.path.join(_scratch_root(), f"bpe_merges_{h}")
-    table = ManagedTable(spark, f"bpe_merges_{h}", loc)
-    if table.current_version() < 0:
+    def build(t):
         docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-        try:
-            table.overwrite(train_bpe(docs))
-        except ConcurrentWriteError:
-            pass  # concurrent builder won; training is deterministic
-    return table
+        t.overwrite(train_bpe(docs))
+
+    return scratch_table(
+        spark, "bpe_merges", inputs(sf_dir, "documents"), None, build
+    )
 
 
 def text_token_counts_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -19,7 +19,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..queries._util import load, read_parquet, rnd
-from ..signature import source_signature
+from ..scratch import scratch_dir
 from . import _ckpt
 from .text import tokens, word_ngrams
 
@@ -296,28 +296,19 @@ def ngram_jaccard_pairs_cached(
     bench-scale analogue of what a production pipeline does anyway:
     persist the near-dup edge TABLE once and join everything else
     against it, instead of re-deriving a corpus-sized similarity join
-    per consumer. Write is atomic (tmp dir + rename); a concurrent
-    builder losing the rename reads the winner's copy."""
+    per consumer. It is a scratch fixture: built in staging and
+    published with one rename, like every other."""
     import hashlib
+    import inspect
     import os
-    import shutil
-    import uuid
 
-    from ..streaming.windows import _scratch_root
+    from . import text as _text
 
     src = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
-    try:
-        fp = source_signature(src)
-    except OSError:
-        fp = src
     # the key carries the IMPLEMENTATION too (source hash of the pair
     # join + its tokenizer deps): scratch outlives code changes on this
     # host, and a stale cached edge set would mask a fix — or fabricate
     # an oracle mismatch — in every consumer (round-13 review)
-    import inspect
-
-    from . import text as _text
-
     impl = hashlib.md5(
         (
             inspect.getsource(ngram_jaccard_pairs)
@@ -326,22 +317,12 @@ def ngram_jaccard_pairs_cached(
             + inspect.getsource(normalized_text)
         ).encode()
     ).hexdigest()[:8]
-    key = hashlib.md5(
-        f"{fp}|{threshold}|{max_df}|{impl}".encode()
-    ).hexdigest()[:12]
-    final = os.path.join(_scratch_root(), f"ngram_pairs_{key}")
-    done = os.path.join(final, "_SUCCESS")
-    if not os.path.exists(done):
-        tmp = f"{final}.tmp.{os.getpid()}.{uuid.uuid4().hex[:6]}"
-        try:
-            ngram_jaccard_pairs(
-                spark, sf_dir, threshold=threshold, max_df=max_df
-            ).write.mode("overwrite").parquet(tmp)
-            os.rename(tmp, final)
-        except Exception:
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.exists(done):
-                raise  # a real build failure, not a lost rename race
+    final = scratch_dir(
+        "ngram_pairs", [src], (threshold, max_df, impl),
+        lambda d: ngram_jaccard_pairs(
+            spark, sf_dir, threshold=threshold, max_df=max_df
+        ).write.mode("overwrite").parquet(d),
+    )
     return read_parquet(spark, final)
 
 

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..queries._util import load, rnd
+from ..scratch import inputs, scratch_table
 from ..sources.tables import ManagedTable
 from .dedup import (
     _MAX_BAND_BUCKET,
@@ -164,23 +165,15 @@ def update_band_index(table: ManagedTable, docs: DataFrame) -> int:
 
 # ------------------------------------------------------- oracle entry
 def _scratch_index(spark: SparkSession, sf_dir: str) -> ManagedTable:
-    import os
+    """The band index of the existing corpus (doc_id % 4 != 0)."""
 
-    from ..queries.managed_scan import _corpus_fingerprint
-    from ..sources.tables import ConcurrentWriteError
-    from ..streaming.windows import _scratch_root
-
-    h = _corpus_fingerprint(sf_dir)
-    loc = os.path.join(_scratch_root(), f"band_idx_{h}")
-    table = ManagedTable(spark, f"band_idx_{h}", loc)
-    if table.current_version() < 0:
+    def build(t):
         docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-        existing = docs.filter(F.col("doc_id") % 4 != 0)
-        try:
-            table.overwrite(band_index_rows(existing))
-        except ConcurrentWriteError:
-            pass  # concurrent builder won; identical deterministic rows
-    return table
+        t.overwrite(band_index_rows(docs.filter(F.col("doc_id") % 4 != 0)))
+
+    return scratch_table(
+        spark, "band_idx", inputs(sf_dir, "documents"), None, build
+    )
 
 
 def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -37,12 +37,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..queries._util import load
+from ..signature import source_signature
 from .dedup import ngram_jaccard_pairs_cached
 
-# (application, path, file stat) → documents row count: the node count
-# feeds teleport/dangling scalars and was a separate count() job per
-# call; stat-keyed like queries.tpch._supplier_count, so a regenerated
-# corpus invalidates it
+# (application, path, source signature) → documents row count: the
+# node count feeds teleport/dangling scalars and was a separate count()
+# job per call; keyed like queries.tpch._supplier_count, so a
+# regenerated corpus invalidates it
 _doc_count_cache: dict = {}
 
 
@@ -50,20 +51,7 @@ def _documents_count(spark: SparkSession, sf_dir: str) -> int:
     import os
 
     path = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
-    try:
-        if os.path.isdir(path):
-            ident = tuple(
-                sorted(
-                    (n, os.stat(os.path.join(path, n)).st_mtime_ns)
-                    for n in os.listdir(path)
-                )
-            )
-        else:
-            st = os.stat(path)
-            ident = (st.st_mtime_ns, st.st_size)
-    except OSError:
-        ident = ()
-    key = (spark.sparkContext.applicationId, path, ident)
+    key = (spark.sparkContext.applicationId, path, source_signature(path))
     if key not in _doc_count_cache:
         n = load(spark, sf_dir, "documents").count()
         # evict only stale generations of the SAME (app, path) — a

@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..queries._util import load, rnd
+from ..signature import source_signature
 
 
 def _as_double(col: Column) -> Column:
@@ -298,13 +299,21 @@ def _bucket_id(vec: Column, n_planes: int = 4, dim: int | None = None) -> Column
     return out.cast("int")
 
 
+def _corpus_key(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
+    """(session, corpus dir, :func:`source_signature` of the
+    embeddings parquet): a regenerated corpus changes the key."""
+    abspath = os.path.abspath(sf_dir)
+    sig = source_signature(os.path.join(abspath, "embeddings.parquet"))
+    return spark.sparkContext.applicationId, abspath, sig
+
+
 # corpus row counts, keyed like the IVF index cache so a regenerated
 # parquet invalidates the cached count
-_corpus_count_cache: dict[tuple[str, str, tuple], int] = {}
+_corpus_count_cache: dict[tuple[str, str, str], int] = {}
 
 # embedding length per corpus generation (same key discipline) — one
 # first-row probe; feeds the literal plane-weight table in _bucket_id
-_corpus_dim_cache: dict[tuple[str, str, tuple], int | None] = {}
+_corpus_dim_cache: dict[tuple[str, str, str], int | None] = {}
 
 
 def _corpus_dim(spark: SparkSession, sf_dir: str) -> int | None:
@@ -314,8 +323,7 @@ def _corpus_dim(spark: SparkSession, sf_dir: str) -> int | None:
     what lets _bucket_id run the literal-weight fast path with NO
     per-row guard — a `when` wrapper around the higher-order
     projections measurably defeats codegen (0.38 → 0.65 s at sf0.1)."""
-    abspath = os.path.abspath(sf_dir)
-    key = (spark.sparkContext.applicationId, abspath, _corpus_fingerprint(sf_dir))
+    key = _corpus_key(spark, sf_dir)
     if key not in _corpus_dim_cache:
         row = (
             load(spark, sf_dir, "embeddings")
@@ -363,8 +371,7 @@ def _auto_planes(
     metadata-cheap ``count()`` per (session, corpus generation), cached
     like the IVF index.
     """
-    abspath = os.path.abspath(sf_dir)
-    key = (spark.sparkContext.applicationId, abspath, _corpus_fingerprint(sf_dir))
+    key = _corpus_key(spark, sf_dir)
     n = _corpus_count_cache.get(key)
     if n is None:
         n = load(spark, sf_dir, "embeddings").count()
@@ -394,12 +401,12 @@ def _auto_centroids(spark: SparkSession, sf_dir: str) -> int:
     pair stage O(n²/k) (VERDICT r07 "What's wrong" 1); k ∝ n (the
     first thing we tried) merely moves the quadratic into the
     assignment stage — measured 3.3× SLOWER than fixed-16 at 10×
-    (scripts/measure_scale_r08.py). The /2 under the root puts the
-    floor crossover at the sf0.01 scale (ceil(sqrt(500/2)) == 16).
+    (scripts/measure_scale_r08.py, last held at commit aaebf3b). The
+    /2 under the root puts the floor crossover at the sf0.01 scale
+    (ceil(sqrt(500/2)) == 16).
     Reuses the per-(session, corpus-generation) cached count; sqrt is
     IEEE-correctly-rounded, so ceil agrees across engines."""
-    abspath = os.path.abspath(sf_dir)
-    key = (spark.sparkContext.applicationId, abspath, _corpus_fingerprint(sf_dir))
+    key = _corpus_key(spark, sf_dir)
     n = _corpus_count_cache.get(key)
     if n is None:
         n = load(spark, sf_dir, "embeddings").count()
@@ -529,31 +536,14 @@ def _assign_to_centroids(vecs: DataFrame, cents: DataFrame) -> DataFrame:
     )
 
 
-# materialized IVF indexes, keyed by (session, corpus, corpus mtime+size,
+# materialized IVF indexes, keyed by (session, corpus, corpus signature,
 # n_centroids). An index exists to be built once and probed many times —
 # the cache is what makes ann_ivf_topk an index PROBE instead of a
 # per-query rebuild. The source-file fingerprint in the key invalidates
 # the index when the parquet corpus is regenerated mid-session (same
 # staleness class the streaming source check guards against); evicted
 # entries are unpersisted so executor memory is released.
-_ivf_index_cache: dict[tuple[str, str, tuple, int], DataFrame] = {}
-
-
-def _corpus_fingerprint(sf_dir: str) -> tuple:
-    """(mtime_ns, size) of the embeddings parquet — file or directory of
-    part-files — so a regenerated corpus changes the cache key."""
-    path = os.path.join(os.path.abspath(sf_dir), "embeddings.parquet")
-    try:
-        if os.path.isdir(path):
-            stats = []
-            for name in sorted(os.listdir(path)):
-                st = os.stat(os.path.join(path, name))
-                stats.append((name, st.st_mtime_ns, st.st_size))
-            return tuple(stats)
-        st = os.stat(path)
-        return (st.st_mtime_ns, st.st_size)
-    except OSError:
-        return ()
+_ivf_index_cache: dict[tuple[str, str, str, int], DataFrame] = {}
 
 
 def ivf_index(
@@ -570,9 +560,8 @@ def ivf_index(
     shape on local mode."""
     if n_centroids is None:
         n_centroids = _auto_centroids(spark, sf_dir)
-    abspath = os.path.abspath(sf_dir)
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, abspath, _corpus_fingerprint(sf_dir), n_centroids)
+    app_id, abspath, sig = _corpus_key(spark, sf_dir)
+    key = (app_id, abspath, sig, n_centroids)
     idx = _ivf_index_cache.get(key)
     if idx is None:
         # evict (and unpersist) any index built for a prior generation of

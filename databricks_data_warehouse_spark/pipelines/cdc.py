@@ -51,6 +51,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..scratch import inputs, scratch_table
 from ..sources.tables import ManagedTable
 
 START_COL = "__START_AT"
@@ -799,31 +800,17 @@ def _cdc_batches(spark, sf_dir: str):
 
 
 def _cdc_table(spark, sf_dir: str, scd: int) -> ManagedTable:
-    import os
-    import shutil
-
-    from ..queries.managed_scan import _corpus_fingerprint
-    from ..sources.tables import ConcurrentWriteError
-    from ..streaming.windows import _scratch_root
-
-    h = _corpus_fingerprint(sf_dir)
-    loc = os.path.join(_scratch_root(), f"cdc{scd}_tbl2_{h}")
-    t = ManagedTable(spark, f"cdc{scd}", loc)
-    v = t.current_version()
-    if v == 2:
-        return t
-    if v >= 0:  # partial build: restart (sequence is deterministic)
-        shutil.rmtree(loc, ignore_errors=True)
-        t = ManagedTable(spark, f"cdc{scd}", loc)
-    try:
+    def build(t):
         for b in _cdc_batches(spark, sf_dir):
             apply_changes(
                 t, b, ["k"], "seq", apply_as_deletes="op = 'delete'",
                 except_columns=["op"], stored_as_scd_type=scd,
             )
-    except ConcurrentWriteError:
-        pass
-    return t
+
+    return scratch_table(
+        spark, f"cdc{scd}_tbl", inputs(sf_dir, "orders"), None, build,
+        name=f"cdc{scd}",
+    )
 
 
 def table_apply_changes_scd1(spark, sf_dir: str) -> DataFrame:
@@ -954,32 +941,18 @@ def _cdc_track_batches(spark, sf_dir: str):
 
 
 def _cdc_track_table(spark, sf_dir: str) -> ManagedTable:
-    import os
-    import shutil
-
-    from ..queries.managed_scan import _corpus_fingerprint
-    from ..sources.tables import ConcurrentWriteError
-    from ..streaming.windows import _scratch_root
-
-    h = _corpus_fingerprint(sf_dir)
-    loc = os.path.join(_scratch_root(), f"cdc2th_tbl_{h}")
-    t = ManagedTable(spark, "cdc2th", loc)
-    v = t.current_version()
-    if v == 2:
-        return t
-    if v >= 0:  # partial build: restart (sequence is deterministic)
-        shutil.rmtree(loc, ignore_errors=True)
-        t = ManagedTable(spark, "cdc2th", loc)
-    try:
+    def build(t):
         for b in _cdc_track_batches(spark, sf_dir):
             apply_changes(
                 t, b, ["k"], "seq", apply_as_deletes="op = 'delete'",
                 except_columns=["op"], stored_as_scd_type=2,
                 track_history_column_list=["status"],
             )
-    except ConcurrentWriteError:
-        pass
-    return t
+
+    return scratch_table(
+        spark, "cdc2th_tbl", inputs(sf_dir, "orders"), None, build,
+        name="cdc2th",
+    )
 
 
 def table_scd2_track_history(spark, sf_dir: str) -> DataFrame:
@@ -1176,30 +1149,16 @@ def _snapshots(spark, sf_dir: str):
 
 
 def _snap_table(spark, sf_dir: str, scd: int) -> ManagedTable:
-    import os
-    import shutil
-
-    from ..queries.managed_scan import _corpus_fingerprint
-    from ..sources.tables import ConcurrentWriteError
-    from ..streaming.windows import _scratch_root
-
-    h = _corpus_fingerprint(sf_dir)
-    loc = os.path.join(_scratch_root(), f"snap{scd}_tbl_{h}")
-    t = ManagedTable(spark, f"snap{scd}", loc)
-    v = t.current_version()
-    if v == 2:
-        return t
-    if v >= 0:  # partial build: restart (sequence is deterministic)
-        shutil.rmtree(loc, ignore_errors=True)
-        t = ManagedTable(spark, f"snap{scd}", loc)
-    try:
+    def build(t):
         for i, s in enumerate(_snapshots(spark, sf_dir), start=1):
             apply_changes_from_snapshot(
                 t, s, ["k"], i, stored_as_scd_type=scd
             )
-    except ConcurrentWriteError:
-        pass
-    return t
+
+    return scratch_table(
+        spark, f"snap{scd}_tbl", inputs(sf_dir, "orders"), None, build,
+        name=f"snap{scd}",
+    )
 
 
 def table_apply_snapshot_scd1(spark, sf_dir: str) -> DataFrame:

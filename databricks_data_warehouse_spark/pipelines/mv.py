@@ -115,24 +115,21 @@ def table_mv_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     relationally; matching proves insert/delete algebra over the
     attributed feed reproduces the GROUP BY exactly. Re-running is a
     txn-watermark no-op (exactly-once)."""
-    import os
-
-    from ..queries.managed_scan import _corpus_fingerprint
     from ..queries.sql_dml_query import _dml_table
-    from ..sources.tables import ConcurrentWriteError
-    from ..streaming.windows import _scratch_root
+    from ..scratch import inputs, scratch_table
 
     src = _dml_table(spark, sf_dir)
-    h = _corpus_fingerprint(sf_dir)
-    loc = os.path.join(_scratch_root(), f"mv_status_{h}")
-    mv = ManagedTable(spark, f"mv_status_{h}", loc)
-    try:
+
+    def build(mv):
         refresh_count_cents_mv(
             src, mv, ["o_orderstatus"], "o_totalprice", to_version=1
         )
         refresh_count_cents_mv(src, mv, ["o_orderstatus"], "o_totalprice")
-    except ConcurrentWriteError:
-        pass  # concurrent builder won; refreshes are deterministic
+
+    mv = scratch_table(
+        spark, "mv_status", inputs(sf_dir, "orders"), None, build
+    )
+    refresh_count_cents_mv(src, mv, ["o_orderstatus"], "o_totalprice")
     return mv.read().orderBy("o_orderstatus")
 
 

@@ -14,12 +14,12 @@ pins the value-level correctness cross-engine.
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..scratch import inputs, race, scratch_dir, scratch_table
 from ..sources.tables import ManagedTable
 from ._util import load
 
@@ -28,22 +28,26 @@ _CUST_LO, _CUST_HI = 100, 220
 _PRICE_LO, _PRICE_HI = 50_000.0, 200_000.0
 
 
-def _corpus_fingerprint(sf_dir: str) -> str:
-    src = os.path.join(os.path.abspath(sf_dir), "orders.parquet")
-    try:
-        if os.path.isdir(src):
-            fp = str(
-                sorted(
-                    (n, os.stat(os.path.join(src, n)).st_mtime_ns)
-                    for n in os.listdir(src)
-                )
-            )
-        else:
-            st = os.stat(src)
-            fp = f"{st.st_mtime_ns}:{st.st_size}"
-    except OSError:
-        fp = "missing"
-    return hashlib.md5(f"{src}|{fp}|zorder=custkey,totalprice".encode()).hexdigest()[:10]
+def _orders_table(spark, sf_dir, kind, build, **table_kwargs):
+    """A scratch table built from ``orders`` alone (see ``scratch``)."""
+    return scratch_table(
+        spark, kind, inputs(sf_dir, "orders"), None, build, **table_kwargs
+    )
+
+
+def _k_price(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """orders as (k, price), the shape most race fixtures mutate."""
+    return load(spark, sf_dir, "orders").select(
+        F.col("o_orderkey").alias("k"),
+        F.col("o_totalprice").alias("price"),
+    )
+
+
+def _handle(t: ManagedTable) -> ManagedTable:
+    """A second writer's handle on the same table."""
+    return ManagedTable(
+        t.spark, t.name, t.location, partition_columns=t.partition_columns
+    )
 
 
 def table_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -52,10 +56,9 @@ def table_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``scan``. Returns the matching rows — hash-equal to ``SELECT …
     WHERE`` on the raw parquet, because skipping may only remove I/O.
 
-    The table build (write + OPTIMIZE ZORDER) is cached per corpus
-    fingerprint, mirroring how a real deployment optimizes once and
-    probes many times; a re-run therefore measures the probe, not the
-    landing.
+    The table build (write + OPTIMIZE ZORDER) is a scratch fixture,
+    mirroring how a real deployment optimizes once and probes many
+    times; a re-run therefore measures the probe, not the landing.
     """
     table = _zorder_table(spark, sf_dir)
     probe = [
@@ -68,22 +71,13 @@ def table_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _zorder_table(spark: SparkSession, sf_dir: str) -> ManagedTable:
-    """The cached Z-ordered orders table (built once per corpus)."""
-    from ..streaming.windows import _scratch_root
+    """The Z-ordered orders table (built once per corpus)."""
 
-    from ..sources.tables import ConcurrentWriteError
+    def build(t):
+        t.overwrite(load(spark, sf_dir, "orders"))
+        t.compact(zorder_by=["o_custkey", "o_totalprice"], target_files=16)
 
-    h = _corpus_fingerprint(sf_dir)
-    loc = os.path.join(_scratch_root(), f"zorder_tbl_{h}")
-    table = ManagedTable(spark, f"orders_z_{h}", loc)
-    if table.current_version() < 1:
-        try:
-            orders = load(spark, sf_dir, "orders")
-            table.overwrite(orders)
-            table.compact(zorder_by=["o_custkey", "o_totalprice"], target_files=16)
-        except ConcurrentWriteError:
-            pass  # concurrent builder won; same deterministic layout
-    return table
+    return _orders_table(spark, sf_dir, "zorder_tbl", build)
 
 
 def table_zorder_scan_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -100,7 +94,7 @@ def table_zorder_scan_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``last_pushdown_report``; this entry pins cross-engine value
     equality."""
     table = _zorder_table(spark, sf_dir)
-    view = f"orders_zv_{_corpus_fingerprint(sf_dir)}"
+    view = f"{table.name}_v"
     table.create_view(view)
     return spark.sql(
         f"""
@@ -130,27 +124,17 @@ _BLOOM_KEYS = (1, 5, 33, 1000, 4000)
 
 
 def _bloom_table(spark: SparkSession, sf_dir: str) -> ManagedTable:
-    """Cached orders table with a bloom index on ``o_orderkey`` and the
+    """Orders table with a bloom index on ``o_orderkey`` and the
     rows deliberately SCATTERED (hash repartition, no sort): every
     file's min/max spans ~the whole key range, the layout where bounds-
     based skipping is useless and Databricks' BLOOMFILTER INDEX is the
     only thing standing between a point lookup and a full scan."""
-    from ..sources.tables import ConcurrentWriteError
-    from ..streaming.windows import _scratch_root
 
-    h = hashlib.md5(
-        (_corpus_fingerprint(sf_dir) + "|bloom=o_orderkey").encode()
-    ).hexdigest()[:10]
-    loc = os.path.join(_scratch_root(), f"bloom_tbl_{h}")
-    table = ManagedTable(spark, f"orders_bloom_{h}", loc)
-    if table.current_version() < 0:
-        try:
-            orders = load(spark, sf_dir, "orders")
-            table.set_bloom_index("o_orderkey", fpp=0.01, ndv=16_384)
-            table.overwrite(orders.repartition(16))
-        except ConcurrentWriteError:
-            pass  # concurrent builder won; same deterministic content
-    return table
+    def build(t):
+        t.set_bloom_index("o_orderkey", fpp=0.01, ndv=16_384)
+        t.overwrite(load(spark, sf_dir, "orders").repartition(16))
+
+    return _orders_table(spark, sf_dir, "bloom_tbl", build)
 
 
 def table_bloom_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -180,12 +164,10 @@ _TS_HI = "2024-01-12 23:59:59"
 
 
 def _generated_table(spark: SparkSession, sf_dir: str) -> ManagedTable:
-    """Cached events table partitioned by the GENERATED column
+    """Events table partitioned by the GENERATED column
     ``day = CAST(ts AS DATE)`` (Delta generated columns): ingest never
     supplies ``day`` — the write computes it — and any filter on ``ts``
     derives a partition filter on ``day`` automatically."""
-    import datetime as _dt
-
     from pyspark.sql.types import (
         DateType,
         DoubleType,
@@ -196,13 +178,6 @@ def _generated_table(spark: SparkSession, sf_dir: str) -> ManagedTable:
         TimestampType,
     )
 
-    from ..sources.tables import ConcurrentWriteError
-    from ..streaming.windows import _scratch_root
-
-    h = hashlib.md5(
-        (_corpus_fingerprint(sf_dir) + "|generated=day").encode()
-    ).hexdigest()[:10]
-    loc = os.path.join(_scratch_root(), f"gen_tbl_{h}")
     schema = StructType(
         [
             StructField("event_id", LongType()),
@@ -213,23 +188,19 @@ def _generated_table(spark: SparkSession, sf_dir: str) -> ManagedTable:
             StructField("day", DateType()),
         ]
     )
-    table = ManagedTable(
-        spark,
-        f"events_gen_{h}",
-        loc,
-        schema=schema,
-        partition_columns=["day"],
-    )
-    if table.current_version() < 0:
-        try:
-            table.set_generated_column("day", "CAST(ts AS DATE)")
-            events = load(spark, sf_dir, "events").select(
+
+    def build(t):
+        t.set_generated_column("day", "CAST(ts AS DATE)")
+        t.overwrite(
+            load(spark, sf_dir, "events").select(
                 "event_id", "ts", "user_id", "event_type", "value"
             )
-            table.overwrite(events)
-        except ConcurrentWriteError:
-            pass  # concurrent builder won; same deterministic content
-    return table
+        )
+
+    return scratch_table(
+        spark, "gen_tbl", inputs(sf_dir, "events"), None, build,
+        schema=schema, partition_columns=["day"],
+    )
 
 
 def table_generated_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -257,32 +228,26 @@ def table_generated_scan_oracle() -> str:
     """
 
 
-def _copy_landing(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """(landing dir, table location) for the COPY INTO entry — the
-    landing zone is the corpus' own orders.parquet staged as one
-    immutable file, keyed by corpus fingerprint."""
-    from ..streaming.windows import _scratch_root
+def _copy_landing(sf_dir: str) -> str:
+    """The COPY INTO landing zone: the corpus' own orders.parquet
+    copied as immutable files. Published before the table is built,
+    because the table's load ledger names the landing files by path."""
+    import shutil
 
-    h = hashlib.md5(
-        (_corpus_fingerprint(sf_dir) + "|copyinto").encode()
-    ).hexdigest()[:10]
-    root = os.path.join(_scratch_root(), f"copy_{h}")
-    landing = os.path.join(root, "landing")
-    os.makedirs(landing, exist_ok=True)
-    src = os.path.join(os.path.abspath(sf_dir), "orders.parquet")
-    dst = os.path.join(landing, "orders-batch.parquet")
-    if not os.path.exists(dst):
+    [src] = inputs(os.path.abspath(sf_dir), "orders")
+
+    def build(d):
         if os.path.isdir(src):
             for i, fn in enumerate(sorted(os.listdir(src))):
                 if fn.endswith(".parquet"):
-                    shutil_copy = __import__("shutil").copyfile
-                    shutil_copy(
+                    shutil.copyfile(
                         os.path.join(src, fn),
-                        os.path.join(landing, f"orders-batch-{i}.parquet"),
+                        os.path.join(d, f"orders-batch-{i}.parquet"),
                     )
         else:
-            __import__("shutil").copyfile(src, dst)
-    return landing, os.path.join(root, "tbl")
+            shutil.copyfile(src, os.path.join(d, "orders-batch.parquet"))
+
+    return scratch_dir("copy_landing", [src], None, build)
 
 
 def table_copy_into(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -298,9 +263,7 @@ def table_copy_into(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructType,
     )
 
-    from ..sources.tables import ConcurrentWriteError
-
-    landing, loc = _copy_landing(spark, sf_dir)
+    landing = _copy_landing(sf_dir)
     schema = StructType(
         [
             StructField("o_orderkey", LongType()),
@@ -309,15 +272,15 @@ def table_copy_into(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("o_totalprice", DoubleType()),
         ]
     )
-    table = ManagedTable(
-        spark, f"orders_copy_{os.path.basename(loc)}", loc, schema=schema
+
+    def build(t):
+        t.create_if_not_exists()
+        t.copy_into(landing)  # the one load
+
+    table = scratch_table(
+        spark, "copy_tbl", [landing], None, build, schema=schema
     )
-    try:
-        table.create_if_not_exists()
-        table.copy_into(landing)  # loads on the first run only
-        table.copy_into(landing)  # ALWAYS a no-op (the contract)
-    except ConcurrentWriteError:
-        pass  # concurrent builder won; ledger state identical
+    table.copy_into(landing)  # ALWAYS a no-op (the contract)
     return table.read().select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
@@ -331,61 +294,45 @@ def table_copy_into_oracle() -> str:
 
 
 def _cluster_table(spark: SparkSession, sf_dir: str) -> ManagedTable:
-    """Cached CLUSTER BY table built the liquid way: half the orders
-    land and get clustered, the second half appends, a second
-    incremental OPTIMIZE lays out ONLY the new slice (asserted: the
-    first round's files must survive inode-untouched)."""
+    """CLUSTER BY table built the liquid way: half the orders land
+    and get clustered, the second half appends, a second incremental
+    OPTIMIZE lays out ONLY the new slice (asserted: the first round's
+    files must survive inode-untouched). Built once, like a real
+    deployment's layout; the probe is what a re-run measures."""
     import glob as _glob
 
-    from ..sources.tables import ConcurrentWriteError
-    from ..streaming.windows import _scratch_root
+    def files(t, v):
+        return {
+            os.path.relpath(p, t.location): os.stat(p).st_ino
+            for rel in set(t._read_manifest(v).values())
+            for p in _glob.glob(
+                os.path.join(t.location, rel) + "/**/*.parquet",
+                recursive=True,
+            )
+        }
 
-    h = _corpus_fingerprint(sf_dir)
-    loc = os.path.join(_scratch_root(), f"cluster_tbl_{h}")
-    table = ManagedTable(
-        spark, f"orders_c_{h}", loc,
+    def build(t):
+        orders = load(spark, sf_dir, "orders")
+        t.overwrite(orders.where(F.col("o_orderkey") % 2 == 0))   # v0
+        t.cluster(target_files=8)                                  # v1
+        first = files(t, 1)
+        t.append(orders.where(F.col("o_orderkey") % 2 == 1))      # v2
+        t.cluster(target_files=8)                                  # v3
+        live = files(t, t.current_version())
+        # the incremental guarantee, asserted in the builder
+        assert set(first) <= set(live), "clustered files were dropped"
+        for rp, ino in first.items():
+            assert live[rp] == ino, (
+                f"clustered file {rp} was rewritten by the "
+                "incremental OPTIMIZE"
+            )
+        # one final no-op proves convergence (commit-free)
+        assert t.cluster() == t.current_version()
+
+    return _orders_table(
+        spark, sf_dir, "cluster_tbl", build,
         cluster_by=["o_custkey", "o_totalprice"],
     )
-    # final version after one build is 3 (overwrite, cluster, append,
-    # cluster); a cached build must NOT rebuild — the probe is the
-    # benchmark, the liquid layout is built once like a real deployment
-    if table.current_version() < 3:
-        try:
-            orders = load(spark, sf_dir, "orders")
-            half = orders.where(F.col("o_orderkey") % 2 == 0)
-            rest = orders.where(F.col("o_orderkey") % 2 == 1)
-            table.overwrite(half)                        # v0
-            table.cluster(target_files=8)                # v1
-            first = {
-                os.path.relpath(p, loc): os.stat(p).st_ino
-                for rel in set(table._read_manifest(1).values())
-                for p in _glob.glob(
-                    os.path.join(loc, rel) + "/**/*.parquet", recursive=True
-                )
-            }
-            table.append(rest)                           # v2
-            table.cluster(target_files=8)                # v3
-            live = {
-                os.path.relpath(p, loc)
-                for rel in set(
-                    table._read_manifest(table.current_version()).values()
-                )
-                for p in _glob.glob(
-                    os.path.join(loc, rel) + "/**/*.parquet", recursive=True
-                )
-            }
-            # the incremental guarantee, asserted in the builder
-            assert set(first) <= live, "clustered files were dropped"
-            for rp, ino in first.items():
-                assert os.stat(os.path.join(loc, rp)).st_ino == ino, (
-                    f"clustered file {rp} was rewritten by the "
-                    "incremental OPTIMIZE"
-                )
-            # one final no-op proves convergence (commit-free)
-            assert table.cluster() == table.current_version()
-        except ConcurrentWriteError:
-            pass  # concurrent builder won; same deterministic sequence
-    return table
 
 
 def table_cluster_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -411,24 +358,21 @@ def table_cluster_scan_oracle() -> str:
 def _converted_table(spark: SparkSession, sf_dir: str) -> "ManagedTable":
     """Orders landed once as a PLAIN parquet directory (range layout),
     then adopted via CONVERT — zero-copy manifest over the raw files,
-    footer stats harvested at adoption."""
-    from ..sources.tables import ConcurrentWriteError, convert_to_managed
-    from ..streaming.windows import _scratch_root
+    footer stats harvested at adoption. The manifest names the raw
+    files by absolute path, so the raw directory is published first
+    and converted at its published path."""
+    from ..sources.tables import convert_to_managed
 
-    h = _corpus_fingerprint(sf_dir)
-    raw = os.path.join(_scratch_root(), f"convert_raw_{h}")
-    loc = os.path.join(_scratch_root(), f"convert_tbl_{h}")
-    t = ManagedTable(spark, f"orders_cv_{h}", loc)
-    if t.current_version() < 0:
-        try:
-            if not os.path.isdir(raw):
-                load(spark, sf_dir, "orders").repartitionByRange(
-                    8, "o_orderkey"
-                ).write.mode("overwrite").parquet(raw)
-            t = convert_to_managed(spark, f"orders_cv_{h}", loc, raw)
-        except (ConcurrentWriteError, FileExistsError):
-            t = ManagedTable(spark, f"orders_cv_{h}", loc)
-    return t
+    raw = scratch_dir(
+        "convert_raw", inputs(sf_dir, "orders"), None,
+        lambda d: load(spark, sf_dir, "orders")
+        .repartitionByRange(8, "o_orderkey")
+        .write.mode("overwrite").parquet(d),
+    )
+    return scratch_table(
+        spark, "convert_tbl", [raw], None,
+        lambda t: convert_to_managed(spark, t.name, t.location, raw),
+    )
 
 
 def table_convert_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -452,38 +396,26 @@ def table_convert_scan_oracle() -> str:
 
 
 def _cdf_table(spark: SparkSession, sf_dir: str) -> ManagedTable:
-    """Cached CDF-enabled table with one content-changing rewrite:
+    """CDF-enabled table with one content-changing rewrite:
     v0 lands all orders (k, price), v1 sets
     ``delta.enableChangeDataFeed``, v2 OVERWRITEs with every 5th key
     dropped and every 3rd repriced (+5). The v2 commit STAGES its
     exact row diff (write-side CDC — Delta's change files): the feed
     entry below must read only those staged files, never re-derive."""
-    from ..sources.tables import ConcurrentWriteError
-    from ..streaming.windows import _scratch_root
 
-    h = _corpus_fingerprint(sf_dir)
-    loc = os.path.join(_scratch_root(), f"cdf_tbl_{h}")
-    t = ManagedTable(spark, f"orders_cdf_{h}", loc)
-    if t.current_version() < 2:
-        try:
-            base = load(spark, sf_dir, "orders").select(
-                F.col("o_orderkey").alias("k"),
-                F.col("o_totalprice").alias("price"),
-            )
-            t.overwrite(base)                                       # v0
-            t.set_properties(
-                {"delta.enableChangeDataFeed": "true"}
-            )                                                       # v1
-            new = base.where(F.col("k") % 5 != 0).select(
-                "k",
-                F.when(F.col("k") % 3 == 0, F.col("price") + 5)
-                .otherwise(F.col("price"))
-                .alias("price"),
-            )
-            t.overwrite(new)                                        # v2
-        except ConcurrentWriteError:
-            pass  # concurrent builder ran the same deterministic steps
-    return t
+    def build(t):
+        base = _k_price(spark, sf_dir)
+        t.overwrite(base)                                           # v0
+        t.set_properties({"delta.enableChangeDataFeed": "true"})    # v1
+        new = base.where(F.col("k") % 5 != 0).select(
+            "k",
+            F.when(F.col("k") % 3 == 0, F.col("price") + 5)
+            .otherwise(F.col("price"))
+            .alias("price"),
+        )
+        t.overwrite(new)                                            # v2
+
+    return _orders_table(spark, sf_dir, "cdf_tbl", build)
 
 
 def table_cdf_staged_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -538,7 +470,7 @@ def table_cdf_staged_scan_oracle() -> str:
 
 
 def _race_table(spark: SparkSession, sf_dir: str) -> ManagedTable:
-    """Cached table built by a REAL commit race (round 11): v0 lands
+    """Table built by a REAL commit race (round 11): v0 lands
     every k % 3 == 0 order; then two handles append the k % 3 == 1 and
     k % 3 == 2 slices AGAINST THE SAME BASE — the second append's
     manifest write is interposed so the first commits underneath it
@@ -546,42 +478,22 @@ def _race_table(spark: SparkSession, sf_dir: str) -> ManagedTable:
     land BOTH (Delta's append-never-conflicts rule): builder-asserted
     that the race fired, that the loser retried onto v2, and that the
     table ends at version 2 with all three slices."""
-    from ..streaming.windows import _scratch_root
 
-    h = _corpus_fingerprint(sf_dir)
-    loc = os.path.join(_scratch_root(), f"race_tbl_{h}")
-    t = ManagedTable(spark, f"orders_race_{h}", loc)
-    if t.current_version() == 2:
-        return t
-    if t.current_version() >= 0:  # partial build: restart
-        import shutil
+    def build(t):
+        base = _k_price(spark, sf_dir)
+        t.overwrite(base.where(F.col("k") % 3 == 0))                # v0
+        t1, t2 = _handle(t), _handle(t)
+        with race(                                              # v1 wins
+            t1, lambda: t2.append(base.where(F.col("k") % 3 == 1))
+        ) as fired:
+            v = t1.append(base.where(F.col("k") % 3 == 2))  # rebases to v2
+        if not fired or v != 2 or t.current_version() != 2:
+            raise AssertionError(
+                f"append rebase did not engage: raced={bool(fired)} "
+                f"v={v} current={t.current_version()}"
+            )
 
-        shutil.rmtree(loc, ignore_errors=True)
-        t = ManagedTable(spark, f"orders_race_{h}", loc)
-    base = load(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_totalprice").alias("price"),
-    )
-    t.overwrite(base.where(F.col("k") % 3 == 0))                    # v0
-    t1 = ManagedTable(spark, f"orders_race_{h}", loc)
-    t2 = ManagedTable(spark, f"orders_race_{h}", loc)
-    orig = t1._write_manifest
-    state = {"raced": False}
-
-    def interposed(*a, **k):
-        if not state["raced"]:
-            state["raced"] = True
-            t2.append(base.where(F.col("k") % 3 == 1))              # v1 wins
-        return orig(*a, **k)
-
-    t1._write_manifest = interposed
-    v = t1.append(base.where(F.col("k") % 3 == 2))        # rebases to v2
-    if not state["raced"] or v != 2 or t.current_version() != 2:
-        raise AssertionError(
-            f"append rebase did not engage: raced={state['raced']} "
-            f"v={v} current={t.current_version()}"
-        )
-    return t
+    return _orders_table(spark, sf_dir, "race_tbl", build)
 
 
 def table_append_race(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -618,7 +530,7 @@ def table_append_race_oracle() -> str:
 
 
 def _disjoint_race_table(spark: SparkSession, sf_dir: str) -> ManagedTable:
-    """Cached table built by a REAL NON-BLIND commit race (round 12):
+    """Table built by a REAL NON-BLIND commit race (round 12):
     v0 lands every order partitioned by ``p = k % 4``; then two
     handles run partition-SCOPED MERGE UPSERTs against the same base —
     the loser repricing partition '1' (+1), the interposed winner
@@ -629,61 +541,31 @@ def _disjoint_race_table(spark: SparkSession, sf_dir: str) -> ManagedTable:
     that the race fired, that the loser rebased onto v2, and that the
     table holds both writers' changes. At 100 TB this is N parallel
     partitioned ingest MERGEs instead of serialized ones."""
-    from ..streaming.windows import _scratch_root
 
-    h = _corpus_fingerprint(sf_dir)
-    loc = os.path.join(_scratch_root(), f"djrace_tbl_{h}")
-    t = ManagedTable(
-        spark, f"orders_djrace_{h}", loc, partition_columns=["p"]
-    )
-    if t.current_version() == 2:
-        return t
-    if t.current_version() >= 0:  # partial build: restart
-        import shutil
-
-        shutil.rmtree(loc, ignore_errors=True)
-        t = ManagedTable(
-            spark, f"orders_djrace_{h}", loc, partition_columns=["p"]
+    def reprice(base, p, by):
+        return base.where(F.col("p") == p).select(
+            "k", (F.col("price") + by).alias("price"), "p"
         )
-    base = load(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_totalprice").alias("price"),
-        (F.col("o_orderkey") % 4).cast("string").alias("p"),
-    )
-    t.overwrite(base)                                               # v0
-    t1 = ManagedTable(
-        spark, f"orders_djrace_{h}", loc, partition_columns=["p"]
-    )
-    t2 = ManagedTable(
-        spark, f"orders_djrace_{h}", loc, partition_columns=["p"]
-    )
-    orig = t1._write_manifest
-    state = {"raced": False}
 
-    def interposed(*a, **k):
-        if not state["raced"]:
-            state["raced"] = True
-            t2.merge_upsert(                                        # v1 wins
-                base.where(F.col("p") == "2").select(
-                    "k", (F.col("price") + 2).alias("price"), "p"
-                ),
-                ["p", "k"],
+    def build(t):
+        base = _k_price(spark, sf_dir).withColumn(
+            "p", (F.col("k") % 4).cast("string")
+        )
+        t.overwrite(base)                                           # v0
+        t1, t2 = _handle(t), _handle(t)
+        with race(                                              # v1 wins
+            t1, lambda: t2.merge_upsert(reprice(base, "2", 2), ["p", "k"])
+        ) as fired:
+            v = t1.merge_upsert(reprice(base, "1", 1), ["p", "k"])  # v2
+        if not fired or v != 2 or t.current_version() != 2:
+            raise AssertionError(
+                f"disjoint merge rebase did not engage: "
+                f"raced={bool(fired)} v={v} current={t.current_version()}"
             )
-        return orig(*a, **k)
 
-    t1._write_manifest = interposed
-    v = t1.merge_upsert(                                   # rebases to v2
-        base.where(F.col("p") == "1").select(
-            "k", (F.col("price") + 1).alias("price"), "p"
-        ),
-        ["p", "k"],
+    return _orders_table(
+        spark, sf_dir, "djrace_tbl", build, partition_columns=["p"]
     )
-    if not state["raced"] or v != 2 or t.current_version() != 2:
-        raise AssertionError(
-            f"disjoint merge rebase did not engage: "
-            f"raced={state['raced']} v={v} current={t.current_version()}"
-        )
-    return t
 
 
 def table_disjoint_merge_race(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -727,7 +609,7 @@ def table_disjoint_merge_race_oracle() -> str:
 
 
 def _row_tracking_table(spark: SparkSession, sf_dir: str) -> ManagedTable:
-    """Cached row-tracking fixture: v0 lands every order (k, price),
+    """Row-tracking fixture: v0 lands every order (k, price),
     v1 enables ``delta.enableRowTracking`` (backfill on commit), v2
     appends the k%3==0 slice repriced, v3 OPTIMIZEs (bin-pack, ids
     MATERIALIZE into the rewritten files), v4 runs a COPY-ON-WRITE
@@ -737,37 +619,23 @@ def _row_tracking_table(spark: SparkSession, sf_dir: str) -> ManagedTable:
     assignment order a run produced, the id SET is exactly
     {0 .. N-1} — the deterministic invariant the oracle checks,
     through BOTH the maintenance rewrite and the DML rewrite."""
-    from ..streaming.windows import _scratch_root
 
-    h = _corpus_fingerprint(sf_dir)
-    loc = os.path.join(_scratch_root(), f"rowtrack_tbl_{h}")
-    t = ManagedTable(spark, f"orders_rt_{h}", loc)
-    # a cached fixture must carry row_ver metadata (a scratch table
-    # built by a pre-row_commit_version build is stale: rebuild)
-    if t.current_version() == 4 and t._read_row_ver(4):
-        return t
-    if t.current_version() >= 0:
-        import shutil
-
-        shutil.rmtree(loc, ignore_errors=True)
-        t = ManagedTable(spark, f"orders_rt_{h}", loc)
-    base = load(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_totalprice").alias("price"),
-    )
-    t.overwrite(base)                                               # v0
-    t.set_properties({"delta.enableRowTracking": "true"})           # v1
-    t.append(
-        base.where(F.col("k") % 3 == 0).select(
-            "k", (F.col("price") + 1).alias("price")
+    def build(t):
+        base = _k_price(spark, sf_dir)
+        t.overwrite(base)                                           # v0
+        t.set_properties({"delta.enableRowTracking": "true"})       # v1
+        t.append(
+            base.where(F.col("k") % 3 == 0).select(
+                "k", (F.col("price") + 1).alias("price")
+            )
+        )                                                           # v2
+        t.optimize(min_small_files=1)                               # v3
+        t.update_where(                                             # v4
+            {"price": "price + 10"}, F.col("k") % 5 == 0,
+            deletion_vectors=False,
         )
-    )                                                               # v2
-    t.optimize(min_small_files=1)                                   # v3
-    t.update_where(                                                 # v4
-        {"price": "price + 10"}, F.col("k") % 5 == 0,
-        deletion_vectors=False,
-    )
-    return t
+
+    return _orders_table(spark, sf_dir, "rowtrack_tbl", build)
 
 
 def table_row_tracking_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -872,7 +740,7 @@ def table_row_tracking_scan_oracle() -> str:
 
 
 def _unpartitioned_race_table(spark: SparkSession, sf_dir: str) -> ManagedTable:
-    """Cached UNPARTITIONED table built by a REAL FILE-level commit
+    """UNPARTITIONED table built by a REAL FILE-level commit
     race (round 13): v0 lands orders with k <= mid, v1 appends k > mid
     (two disjoint file sets by construction); then two handles race —
     the interposed winner runs a merge-on-read ``UPDATE (DV)``
@@ -889,54 +757,48 @@ def _unpartitioned_race_table(spark: SparkSession, sf_dir: str) -> ManagedTable:
     writers' changes hold. At 100 TB this is concurrent GDPR deletes /
     backfills on an unpartitioned dimension table landing in parallel
     instead of serializing."""
-    from ..streaming.windows import _scratch_root
+    return _dml_race_table(spark, sf_dir, "uprace_tbl", True)
 
-    h = _corpus_fingerprint(sf_dir)
-    loc = os.path.join(_scratch_root(), f"uprace_tbl_{h}")
-    t = ManagedTable(spark, f"orders_uprace_{h}", loc)
-    if t.current_version() == 3:
-        return t
-    if t.current_version() >= 0:  # partial build: restart
-        import shutil
 
-        shutil.rmtree(loc, ignore_errors=True)
-        t = ManagedTable(spark, f"orders_uprace_{h}", loc)
-    base = load(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_totalprice").alias("price"),
-    )
-    bounds = base.agg(
-        F.min("k").alias("lo"), F.max("k").alias("hi")
-    ).collect()[0]
-    mid = (int(bounds["lo"]) + int(bounds["hi"])) // 2
-    q = mid // 4
-    t.overwrite(base.where(F.col("k") <= mid))                     # v0
-    t.append(base.where(F.col("k") > mid))                         # v1
-    t1 = ManagedTable(spark, f"orders_uprace_{h}", loc)
-    t2 = ManagedTable(spark, f"orders_uprace_{h}", loc)
-    orig = t1._write_manifest
-    state = {"raced": False}
+def _key_bounds(base: DataFrame) -> tuple[int, int]:
+    b = base.agg(F.min("k").alias("lo"), F.max("k").alias("hi")).collect()[0]
+    return int(b["lo"]), int(b["hi"])
 
-    def interposed(*a, **k):
-        if not state["raced"]:
-            state["raced"] = True
-            t2.update_where(                                # v2 wins
-                {"price": "price + 2"},
-                (F.col("k") > mid) & (F.col("k") % 10 == 3),
+
+def _dml_race_table(
+    spark: SparkSession, sf_dir: str, kind: str, deletion_vectors: bool
+) -> ManagedTable:
+    """The two-commit (k <= mid, k > mid) table raced by an UPDATE of
+    a high-half slice (+2, the winner) against a DELETE of a low-half
+    slice (the loser, which must rebase onto v3); see
+    ``_unpartitioned_race_table`` and ``_cow_race_table``."""
+    what = "file-level DV" if deletion_vectors else "entry-scoped CoW"
+
+    def build(t):
+        base = _k_price(spark, sf_dir)
+        lo, hi = _key_bounds(base)
+        mid = (lo + hi) // 2
+        q = mid // 4
+        t.overwrite(base.where(F.col("k") <= mid))                 # v0
+        t.append(base.where(F.col("k") > mid))                     # v1
+        t1, t2 = _handle(t), _handle(t)
+        with race(t1, lambda: t2.update_where(              # v2 wins
+            {"price": "price + 2"},
+            (F.col("k") > mid) & (F.col("k") % 10 == 3),
+            deletion_vectors=deletion_vectors,
+        )) as fired:
+            v = t1.delete_where(                           # rebases to v3
+                (F.col("k") <= q) & (F.col("k") % 10 == 7),
+                deletion_vectors=deletion_vectors,
+                read_filters=[[("k", "<=", q)]],
             )
-        return orig(*a, **k)
+        if not fired or v != 3 or t.current_version() != 3:
+            raise AssertionError(
+                f"{what} rebase did not engage: "
+                f"raced={bool(fired)} v={v} current={t.current_version()}"
+            )
 
-    t1._write_manifest = interposed
-    v = t1.delete_where(                               # rebases to v3
-        (F.col("k") <= q) & (F.col("k") % 10 == 7),
-        read_filters=[[("k", "<=", q)]],
-    )
-    if not state["raced"] or v != 3 or t.current_version() != 3:
-        raise AssertionError(
-            f"file-level DV rebase did not engage: "
-            f"raced={state['raced']} v={v} current={t.current_version()}"
-        )
-    return t
+    return _orders_table(spark, sf_dir, kind, build)
 
 
 def table_unpartitioned_race(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -986,7 +848,7 @@ def table_unpartitioned_race_oracle() -> str:
 
 
 def _optimize_race_table(spark: SparkSession, sf_dir: str) -> ManagedTable:
-    """Cached table built by a REAL MAINTENANCE-vs-INGEST commit race
+    """Table built by a REAL MAINTENANCE-vs-INGEST commit race
     (round 13, VERDICT r12 item 8): v0 lands every order partitioned
     by ``p = k % 4``; v1/v2 fragment partition '0' with two small
     appends; then the loser OPTIMIZEs partition '0' (bin-packing its
@@ -999,61 +861,34 @@ def _optimize_race_table(spark: SparkSession, sf_dir: str) -> ManagedTable:
     tests/test_disjoint_rebase.py:315 — this entry makes it
     driver-checked). At 100 TB this is background compaction never
     serializing against ingest on other partitions."""
-    from ..streaming.windows import _scratch_root
 
-    h = _corpus_fingerprint(sf_dir)
-    loc = os.path.join(_scratch_root(), f"optrace_tbl_{h}")
-    t = ManagedTable(
-        spark, f"orders_optrace_{h}", loc, partition_columns=["p"]
-    )
-    if t.current_version() == 4:
-        return t
-    if t.current_version() >= 0:  # partial build: restart
-        import shutil
-
-        shutil.rmtree(loc, ignore_errors=True)
-        t = ManagedTable(
-            spark, f"orders_optrace_{h}", loc, partition_columns=["p"]
+    def build(t):
+        base = _k_price(spark, sf_dir).withColumn(
+            "p", (F.col("k") % 4).cast("string")
         )
-    base = load(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_totalprice").alias("price"),
-        (F.col("o_orderkey") % 4).cast("string").alias("p"),
-    )
-    t.overwrite(base)                                               # v0
-    extra = [(2_000_000_001, 111.0, "0"), (2_000_000_002, 222.0, "0")]
-    for row in extra:                              # v1, v2: fragment p=0
-        t.append(
-            spark.createDataFrame([row], "k long, price double, p string")
-        )
-    t1 = ManagedTable(
-        spark, f"orders_optrace_{h}", loc, partition_columns=["p"]
-    )
-    t2 = ManagedTable(
-        spark, f"orders_optrace_{h}", loc, partition_columns=["p"]
-    )
-    orig = t1._write_manifest
-    state = {"raced": False}
-
-    def interposed(*a, **k):
-        if not state["raced"]:
-            state["raced"] = True
-            t2.merge_upsert(                                # v3 wins
-                base.where(F.col("p") == "1").select(
-                    "k", (F.col("price") + 1).alias("price"), "p"
-                ),
-                ["p", "k"],
+        t.overwrite(base)                                           # v0
+        extra = [(2_000_000_001, 111.0, "0"), (2_000_000_002, 222.0, "0")]
+        for row in extra:                          # v1, v2: fragment p=0
+            t.append(
+                spark.createDataFrame([row], "k long, price double, p string")
             )
-        return orig(*a, **k)
+        t1, t2 = _handle(t), _handle(t)
+        with race(t1, lambda: t2.merge_upsert(              # v3 wins
+            base.where(F.col("p") == "1").select(
+                "k", (F.col("price") + 1).alias("price"), "p"
+            ),
+            ["p", "k"],
+        )) as fired:
+            v = t1.optimize(min_small_files=2, where=[("p", "=", "0")])
+        if not fired or v != 4 or t.current_version() != 4:
+            raise AssertionError(
+                f"optimize-vs-ingest rebase did not engage: "
+                f"raced={bool(fired)} v={v} current={t.current_version()}"
+            )
 
-    t1._write_manifest = interposed
-    v = t1.optimize(min_small_files=2, where=[("p", "=", "0")])
-    if not state["raced"] or v != 4 or t.current_version() != 4:
-        raise AssertionError(
-            f"optimize-vs-ingest rebase did not engage: "
-            f"raced={state['raced']} v={v} current={t.current_version()}"
-        )
-    return t
+    return _orders_table(
+        spark, sf_dir, "optrace_tbl", build, partition_columns=["p"]
+    )
 
 
 def table_optimize_race(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1101,7 +936,7 @@ def table_optimize_race_oracle() -> str:
 
 
 def _merge_on_read_table(spark: SparkSession, sf_dir: str) -> ManagedTable:
-    """Cached UNPARTITIONED table exercising merge-on-read MERGE
+    """UNPARTITIONED table exercising merge-on-read MERGE
     (round 13: ``merge_clauses(deletion_vectors=True)`` — Delta's
     MERGE-with-DVs): v0 lands every order; ONE merge then (a) deletes
     the k%100==0 slice via a conditional matched-DELETE clause, (b)
@@ -1111,52 +946,40 @@ def _merge_on_read_table(spark: SparkSession, sf_dir: str) -> ManagedTable:
     every untouched file carries over byte-identical (the builder
     asserts the v0 entries survive verbatim and that history records
     MERGE (DV))."""
-    from ..streaming.windows import _scratch_root
 
-    h = _corpus_fingerprint(sf_dir)
-    loc = os.path.join(_scratch_root(), f"mor_tbl_{h}")
-    t = ManagedTable(spark, f"orders_mor_{h}", loc)
-    if t.current_version() == 1:
-        return t
-    if t.current_version() >= 0:  # partial build: restart
-        import shutil
-
-        shutil.rmtree(loc, ignore_errors=True)
-        t = ManagedTable(spark, f"orders_mor_{h}", loc)
-    base = load(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_totalprice").alias("price"),
-    )
-    t.overwrite(base)                                               # v0
-    v0_entries = set(t._read_manifest(0).values())
-    src = (
-        base.where((F.col("k") % 100 == 0) | (F.col("k") % 10 == 3))
-        .select("k", "price")
-        .unionByName(
-            spark.createDataFrame(
-                [(3_000_000_001, 11.0), (3_000_000_002, 22.0)],
-                "k long, price double",
+    def build(t):
+        base = _k_price(spark, sf_dir)
+        t.overwrite(base)                                           # v0
+        v0_entries = set(t._read_manifest(0).values())
+        src = (
+            base.where((F.col("k") % 100 == 0) | (F.col("k") % 10 == 3))
+            .select("k", "price")
+            .unionByName(
+                spark.createDataFrame(
+                    [(3_000_000_001, 11.0), (3_000_000_002, 22.0)],
+                    "k long, price double",
+                )
             )
         )
-    )
-    v = t.merge_clauses(                                            # v1
-        src,
-        ["k"],
-        matched=[
-            ("k % 100 = 0", "delete"),
-            (None, {"price": "price + 5"}),
-        ],
-        not_matched=[(None, "insert_all")],
-        deletion_vectors=True,
-    )
-    hist_op = t.history()[0]["operation"]
-    v1_entries = set(t._read_manifest(v).values())
-    if v != 1 or hist_op != "MERGE (DV)" or not v0_entries <= v1_entries:
-        raise AssertionError(
-            f"merge-on-read merge did not take the DV path: v={v} "
-            f"op={hist_op!r} carried={v0_entries <= v1_entries}"
+        v = t.merge_clauses(                                        # v1
+            src,
+            ["k"],
+            matched=[
+                ("k % 100 = 0", "delete"),
+                (None, {"price": "price + 5"}),
+            ],
+            not_matched=[(None, "insert_all")],
+            deletion_vectors=True,
         )
-    return t
+        hist_op = t.history()[0]["operation"]
+        v1_entries = set(t._read_manifest(v).values())
+        if v != 1 or hist_op != "MERGE (DV)" or not v0_entries <= v1_entries:
+            raise AssertionError(
+                f"merge-on-read merge did not take the DV path: v={v} "
+                f"op={hist_op!r} carried={v0_entries <= v1_entries}"
+            )
+
+    return _orders_table(spark, sf_dir, "mor_tbl", build)
 
 
 def table_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1203,7 +1026,7 @@ def table_merge_on_read_oracle() -> str:
 
 
 def _cow_race_table(spark: SparkSession, sf_dir: str) -> ManagedTable:
-    """Cached UNPARTITIONED table built by a REAL COPY-ON-WRITE commit
+    """UNPARTITIONED table built by a REAL COPY-ON-WRITE commit
     race (round 14, VERDICT r13 item 4): v0 lands orders with k <=
     mid, v1 appends k > mid (two disjoint file sets); then two handles
     race with ``deletion_vectors=False`` DML — the interposed winner
@@ -1219,56 +1042,7 @@ def _cow_race_table(spark: SparkSession, sf_dir: str) -> ManagedTable:
     copy-on-write rewrites (DVs disabled by policy) landing in
     parallel on an unpartitioned table instead of serializing — and
     each rewriting only its touched files, never the snapshot."""
-    from ..streaming.windows import _scratch_root
-
-    h = _corpus_fingerprint(sf_dir)
-    loc = os.path.join(_scratch_root(), f"cowrace_tbl_{h}")
-    t = ManagedTable(spark, f"orders_cowrace_{h}", loc)
-    if t.current_version() == 3:
-        return t
-    if t.current_version() >= 0:  # partial build: restart
-        import shutil
-
-        shutil.rmtree(loc, ignore_errors=True)
-        t = ManagedTable(spark, f"orders_cowrace_{h}", loc)
-    base = load(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_totalprice").alias("price"),
-    )
-    bounds = base.agg(
-        F.min("k").alias("lo"), F.max("k").alias("hi")
-    ).collect()[0]
-    mid = (int(bounds["lo"]) + int(bounds["hi"])) // 2
-    q = mid // 4
-    t.overwrite(base.where(F.col("k") <= mid))                     # v0
-    t.append(base.where(F.col("k") > mid))                         # v1
-    t1 = ManagedTable(spark, f"orders_cowrace_{h}", loc)
-    t2 = ManagedTable(spark, f"orders_cowrace_{h}", loc)
-    orig = t1._write_manifest
-    state = {"raced": False}
-
-    def interposed(*a, **k):
-        if not state["raced"]:
-            state["raced"] = True
-            t2.update_where(                                # v2 wins
-                {"price": "price + 2"},
-                (F.col("k") > mid) & (F.col("k") % 10 == 3),
-                deletion_vectors=False,
-            )
-        return orig(*a, **k)
-
-    t1._write_manifest = interposed
-    v = t1.delete_where(                               # rebases to v3
-        (F.col("k") <= q) & (F.col("k") % 10 == 7),
-        deletion_vectors=False,
-        read_filters=[[("k", "<=", q)]],
-    )
-    if not state["raced"] or v != 3 or t.current_version() != 3:
-        raise AssertionError(
-            f"entry-scoped CoW rebase did not engage: "
-            f"raced={state['raced']} v={v} current={t.current_version()}"
-        )
-    return t
+    return _dml_race_table(spark, sf_dir, "cowrace_tbl", False)
 
 
 def table_cow_race(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1318,7 +1092,7 @@ def table_cow_race_oracle() -> str:
 
 
 def _file_cow_race_table(spark: SparkSession, sf_dir: str) -> ManagedTable:
-    """Cached UNPARTITIONED table built by a REAL per-FILE
+    """UNPARTITIONED table built by a REAL per-FILE
     copy-on-write race (round 15, VERDICT r14 item 2): v0 lands ALL
     orders in ONE manifest entry holding TWO range-split files (low
     half / high half of o_orderkey), so entry-level disjointness is
@@ -1335,85 +1109,61 @@ def _file_cow_race_table(spark: SparkSession, sf_dir: str) -> ManagedTable:
     this is Delta's AddFile/RemoveFile granularity: two selective CoW
     rewrites inside one huge unpartitioned entry land in parallel,
     each writing O(its matched files), never the snapshot."""
-    from ..streaming.windows import _scratch_root
 
-    h = _corpus_fingerprint(sf_dir)
-    loc = os.path.join(_scratch_root(), f"fcowrace_tbl_{h}")
-    t = ManagedTable(spark, f"orders_fcowrace_{h}", loc)
-    if t.current_version() == 2:
-        return t
-    if t.current_version() >= 0:  # partial build: restart
-        import shutil
-
-        shutil.rmtree(loc, ignore_errors=True)
-        t = ManagedTable(spark, f"orders_fcowrace_{h}", loc)
-    base = load(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_totalprice").alias("price"),
-    )
-    bounds = base.agg(
-        F.min("k").alias("lo"), F.max("k").alias("hi")
-    ).collect()[0]
-    mid = (int(bounds["lo"]) + int(bounds["hi"])) // 2
-    q = mid // 4
-    # ONE commit, ONE entry, MULTIPLE files with a DETERMINISTIC
-    # boundary at mid (a sampled repartitionByRange boundary can
-    # drift across scale factors and put both DML slices in one
-    # file): a k-sorted single partition with maxRecordsPerFile =
-    # |low half| rolls to a new file exactly at the boundary
-    n_low = base.where(F.col("k") <= mid).count()
-    prev_mrpf = spark.conf.get("spark.sql.files.maxRecordsPerFile", "0")
-    spark.conf.set("spark.sql.files.maxRecordsPerFile", str(n_low))
-    try:
-        t.overwrite(base.coalesce(1).sortWithinPartitions("k"))   # v0
-    finally:
-        spark.conf.set("spark.sql.files.maxRecordsPerFile", prev_mrpf)
-    stats0 = t._read_stats(0)
-    file_bounds = [
-        (s["cols"]["k"][0], s["cols"]["k"][1]) for s in stats0.values()
-    ]
-    low_files = [b for b in file_bounds if b[1] <= mid]
-    high_files = [b for b in file_bounds if b[0] > mid]
-    if (
-        len(stats0) < 2
-        or len(low_files) != 1
-        or len(low_files) + len(high_files) != len(file_bounds)
-    ):
-        raise AssertionError(
-            f"fixture wants a clean file split at {mid}: {file_bounds}"
-        )
-    t1 = ManagedTable(spark, f"orders_fcowrace_{h}", loc)
-    t2 = ManagedTable(spark, f"orders_fcowrace_{h}", loc)
-    orig = t1._write_manifest
-    state = {"raced": False}
-
-    def interposed(*a, **k):
-        if not state["raced"]:
-            state["raced"] = True
-            t2.update_where(                                # v1 wins
-                {"price": "price + 2"},
-                (F.col("k") > mid) & (F.col("k") % 10 == 3),
-                deletion_vectors=False,
+    def build(t):
+        base = _k_price(spark, sf_dir)
+        lo, hi = _key_bounds(base)
+        mid = (lo + hi) // 2
+        q = mid // 4
+        # ONE commit, ONE entry, MULTIPLE files with a DETERMINISTIC
+        # boundary at mid (a sampled repartitionByRange boundary can
+        # drift across scale factors and put both DML slices in one
+        # file): a k-sorted single partition with maxRecordsPerFile =
+        # |low half| rolls to a new file exactly at the boundary
+        n_low = base.where(F.col("k") <= mid).count()
+        prev_mrpf = spark.conf.get("spark.sql.files.maxRecordsPerFile", "0")
+        spark.conf.set("spark.sql.files.maxRecordsPerFile", str(n_low))
+        try:
+            t.overwrite(base.coalesce(1).sortWithinPartitions("k"))  # v0
+        finally:
+            spark.conf.set("spark.sql.files.maxRecordsPerFile", prev_mrpf)
+        stats0 = t._read_stats(0)
+        file_bounds = [
+            (s["cols"]["k"][0], s["cols"]["k"][1]) for s in stats0.values()
+        ]
+        low_files = [b for b in file_bounds if b[1] <= mid]
+        high_files = [b for b in file_bounds if b[0] > mid]
+        if (
+            len(stats0) < 2
+            or len(low_files) != 1
+            or len(low_files) + len(high_files) != len(file_bounds)
+        ):
+            raise AssertionError(
+                f"fixture wants a clean file split at {mid}: {file_bounds}"
             )
-        return orig(*a, **k)
+        t1, t2 = _handle(t), _handle(t)
+        with race(t1, lambda: t2.update_where(              # v1 wins
+            {"price": "price + 2"},
+            (F.col("k") > mid) & (F.col("k") % 10 == 3),
+            deletion_vectors=False,
+        )) as fired:
+            v = t1.delete_where(                           # rebases to v2
+                (F.col("k") <= q) & (F.col("k") % 10 == 7),
+                deletion_vectors=False,
+                read_filters=[[("k", "<=", q)]],
+            )
+        if not fired or v != 2 or t.current_version() != 2:
+            raise AssertionError(
+                f"per-file CoW rebase did not engage: "
+                f"raced={bool(fired)} v={v} current={t.current_version()}"
+            )
+        if not any("@carry:" in k for k in t._read_manifest(1)):
+            raise AssertionError(
+                "winner's commit did not carry the untouched neighbor "
+                "file as a file-granular entry"
+            )
 
-    t1._write_manifest = interposed
-    v = t1.delete_where(                               # rebases to v2
-        (F.col("k") <= q) & (F.col("k") % 10 == 7),
-        deletion_vectors=False,
-        read_filters=[[("k", "<=", q)]],
-    )
-    if not state["raced"] or v != 2 or t.current_version() != 2:
-        raise AssertionError(
-            f"per-file CoW rebase did not engage: "
-            f"raced={state['raced']} v={v} current={t.current_version()}"
-        )
-    if not any("@carry:" in k for k in t._read_manifest(1)):
-        raise AssertionError(
-            "winner's commit did not carry the untouched neighbor "
-            "file as a file-granular entry"
-        )
-    return t
+    return _orders_table(spark, sf_dir, "fcowrace_tbl", build)
 
 
 def table_file_cow_race(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1463,7 +1213,7 @@ def table_file_cow_race_oracle() -> str:
 
 
 def _sparse_bloom_race_table(spark: SparkSession, sf_dir: str) -> ManagedTable:
-    """Cached table built by a REAL above-cap key-set race (round 15,
+    """Table built by a REAL above-cap key-set race (round 15,
     VERDICT r14 item 3): v0 lands orders with k <= mid, v1 appends
     k > mid. The loser then runs a merge-on-read MERGE whose source
     has WELL OVER ``_KEY_SET_CAP`` distinct keys (every low-half
@@ -1479,79 +1229,54 @@ def _sparse_bloom_race_table(spark: SparkSession, sf_dir: str) -> ManagedTable:
     really is BETWEEN+in_bloom (above-cap), the race fired, the loser
     landed at v3. At 100 TB this is a bulk keyed MERGE landing in
     parallel with an unrelated racing rewrite inside its key span."""
-    from ..streaming.windows import _scratch_root
 
-    h = _corpus_fingerprint(sf_dir)
-    loc = os.path.join(_scratch_root(), f"kbloomrace_tbl_{h}")
-    t = ManagedTable(spark, f"orders_kbloomrace_{h}", loc)
-    if t.current_version() == 3:
-        return t
-    if t.current_version() >= 0:  # partial build: restart
-        import shutil
-
-        shutil.rmtree(loc, ignore_errors=True)
-        t = ManagedTable(spark, f"orders_kbloomrace_{h}", loc)
-    base = load(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_totalprice").alias("price"),
-    )
-    bounds = base.agg(
-        F.min("k").alias("lo"), F.max("k").alias("hi")
-    ).collect()[0]
-    lo, hi = int(bounds["lo"]), int(bounds["hi"])
-    mid = (lo + hi) // 2
-    chosen = (
-        base.where((F.col("k") > mid) & (F.col("k") % 10 == 3))
-        .agg(F.max("k"))
-        .collect()[0][0]
-    )
-    t.overwrite(base.where(F.col("k") <= mid))                     # v0
-    t.append(base.where(F.col("k") > mid))                         # v1
-    src = (
-        base.where((F.col("k") <= mid) & (F.col("k") % 10 == 7))
-        .select("k", (F.col("price") + 1).alias("price"))
-        .unionByName(
-            spark.range(0, 1300).select(
-                (F.lit(hi) * 2 + F.col("id") * 10 + 7).alias("k"),
-                F.lit(11.0).alias("price"),
+    def build(t):
+        base = _k_price(spark, sf_dir)
+        lo, hi = _key_bounds(base)
+        mid = (lo + hi) // 2
+        chosen = (
+            base.where((F.col("k") > mid) & (F.col("k") % 10 == 3))
+            .agg(F.max("k"))
+            .collect()[0][0]
+        )
+        t.overwrite(base.where(F.col("k") <= mid))                 # v0
+        t.append(base.where(F.col("k") > mid))                     # v1
+        src = (
+            base.where((F.col("k") <= mid) & (F.col("k") % 10 == 7))
+            .select("k", (F.col("price") + 1).alias("price"))
+            .unionByName(
+                spark.range(0, 1300).select(
+                    (F.lit(hi) * 2 + F.col("id") * 10 + 7).alias("k"),
+                    F.lit(11.0).alias("price"),
+                )
             )
         )
-    )
-    [trips] = t._source_key_dnf(src, ["k"])
-    ops = [tr[1] for tr in trips]
-    if "in_bloom" not in ops or "between" not in ops:
-        raise AssertionError(
-            f"above-cap key set did not declare BETWEEN+in_bloom: {ops}"
-        )
-    t1 = ManagedTable(spark, f"orders_kbloomrace_{h}", loc)
-    t2 = ManagedTable(spark, f"orders_kbloomrace_{h}", loc)
-    orig = t1._write_manifest
-    state = {"raced": False}
-
-    def interposed(*a, **k):
-        if not state["raced"]:
-            state["raced"] = True
-            t2.update_where(                                # v2 wins
-                {"price": "price + 2"},
-                F.col("k") == int(chosen),
+        [trips] = t._source_key_dnf(src, ["k"])
+        ops = [tr[1] for tr in trips]
+        if "in_bloom" not in ops or "between" not in ops:
+            raise AssertionError(
+                f"above-cap key set did not declare BETWEEN+in_bloom: {ops}"
+            )
+        t1, t2 = _handle(t), _handle(t)
+        with race(t1, lambda: t2.update_where(              # v2 wins
+            {"price": "price + 2"},
+            F.col("k") == int(chosen),
+            deletion_vectors=True,
+        )) as fired:
+            v = t1.merge_clauses(                          # rebases to v3
+                src,
+                ["k"],
+                matched=[(None, {"price": "src.price"})],
+                not_matched=[(None, "insert_all")],
                 deletion_vectors=True,
             )
-        return orig(*a, **k)
+        if not fired or v != 3 or t.current_version() != 3:
+            raise AssertionError(
+                f"above-cap bloom rebase did not engage: "
+                f"raced={bool(fired)} v={v} current={t.current_version()}"
+            )
 
-    t1._write_manifest = interposed
-    v = t1.merge_clauses(                              # rebases to v3
-        src,
-        ["k"],
-        matched=[(None, {"price": "src.price"})],
-        not_matched=[(None, "insert_all")],
-        deletion_vectors=True,
-    )
-    if not state["raced"] or v != 3 or t.current_version() != 3:
-        raise AssertionError(
-            f"above-cap bloom rebase did not engage: "
-            f"raced={state['raced']} v={v} current={t.current_version()}"
-        )
-    return t
+    return _orders_table(spark, sf_dir, "kbloomrace_tbl", build)
 
 
 def table_sparse_bloom_race(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1610,7 +1335,7 @@ def table_sparse_bloom_race_oracle() -> str:
 
 
 def _identity_merge_table(spark: SparkSession, sf_dir: str) -> ManagedTable:
-    """Cached IDENTITY table exercised by a merge-on-read MERGE that
+    """IDENTITY table exercised by a merge-on-read MERGE that
     MINTS (round 14, VERDICT r13 item 2): v1 appends orders with
     k <= mid sorted by k — the two-phase assignment gives id =
     rank-of-k (partition offsets accumulate in range order), so the
@@ -1624,56 +1349,36 @@ def _identity_merge_table(spark: SparkSession, sf_dir: str) -> ManagedTable:
     Minted-insert id PAIRING is join-order-dependent, so the oracle
     checks the insert ids as a SET (contiguous n+1..n+m) and the base
     ids exactly."""
-    from ..streaming.windows import _scratch_root
 
-    h = _corpus_fingerprint(sf_dir)
-    loc = os.path.join(_scratch_root(), f"idmerge_tbl_{h}")
-    t = ManagedTable(spark, f"orders_idmerge_{h}", loc)
-    if t.current_version() == 2:
-        return t
-    if t.current_version() >= 0:  # partial build: restart
-        import shutil
-
-        shutil.rmtree(loc, ignore_errors=True)
-        t = ManagedTable(spark, f"orders_idmerge_{h}", loc)
+    def build(t):
         t.set_identity_column("id", start=1, step=1)
-    else:
-        t.set_identity_column("id", start=1, step=1)
-    base = load(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_totalprice").alias("price"),
-    )
-    bounds = base.agg(
-        F.min("k").alias("lo"), F.max("k").alias("hi")
-    ).collect()[0]
-    mid = (int(bounds["lo"]) + int(bounds["hi"])) // 2
-    schema = (
-        spark.createDataFrame([], "id long, k long, price double").schema
-    )
-    t.create_if_not_exists(schema)                                 # v0
-    t.append(base.where(F.col("k") <= mid).orderBy("k"))           # v1
-    files_v1 = set(t._read_manifest(t.current_version()).values())
-    src = (
-        base.where(F.col("k") % 10 == 3)
-        .orderBy("k")
-    )
-    t.merge_clauses(                                               # v2
-        src,
-        ["k"],
-        matched=[(None, {"price": "price + 5"})],
-        not_matched=[(None, "insert_all")],
-        deletion_vectors=True,
-    )
-    hist = t.history()[0]["operation"]
-    carried = files_v1 <= set(
-        t._read_manifest(t.current_version()).values()
-    )
-    if hist != "MERGE (DV)" or not carried:
-        raise AssertionError(
-            f"identity merge-on-read did not engage: op={hist} "
-            f"carried={carried}"
+        base = _k_price(spark, sf_dir)
+        lo, hi = _key_bounds(base)
+        mid = (lo + hi) // 2
+        schema = (
+            spark.createDataFrame([], "id long, k long, price double").schema
         )
-    return t
+        t.create_if_not_exists(schema)                             # v0
+        t.append(base.where(F.col("k") <= mid).orderBy("k"))       # v1
+        files_v1 = set(t._read_manifest(t.current_version()).values())
+        t.merge_clauses(                                           # v2
+            base.where(F.col("k") % 10 == 3).orderBy("k"),
+            ["k"],
+            matched=[(None, {"price": "price + 5"})],
+            not_matched=[(None, "insert_all")],
+            deletion_vectors=True,
+        )
+        hist = t.history()[0]["operation"]
+        carried = files_v1 <= set(
+            t._read_manifest(t.current_version()).values()
+        )
+        if hist != "MERGE (DV)" or not carried:
+            raise AssertionError(
+                f"identity merge-on-read did not engage: op={hist} "
+                f"carried={carried}"
+            )
+
+    return _orders_table(spark, sf_dir, "idmerge_tbl", build)
 
 
 def table_identity_merge_dv(spark: SparkSession, sf_dir: str) -> DataFrame:

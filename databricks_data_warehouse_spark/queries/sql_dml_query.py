@@ -22,18 +22,15 @@ encoding is exact in both engines.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..scratch import inputs, scratch_table
 from ..sources.sql_dml import SqlSession
-from ..sources.tables import ConcurrentWriteError, ManagedTable
+from ..sources.tables import ManagedTable
 from ._util import cents, load
-from .managed_scan import _corpus_fingerprint
 
-# the three mutations (deterministic; final version must be 3)
+# the three mutations (deterministic; they end at version 3)
 _DELETE = "DELETE FROM t WHERE o_orderstatus = 'F' AND o_totalprice < 100000"
 _UPDATE = (
     "UPDATE t SET o_totalprice = o_totalprice + 10 WHERE o_orderstatus = 'O'"
@@ -42,7 +39,6 @@ _MERGE = (
     "MERGE INTO t USING batch ON t.o_orderkey = batch.o_orderkey "
     "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
 )
-_FINAL_VERSION = 3
 _KEY_SHIFT = 100_000_000
 
 _COLS = ("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
@@ -71,33 +67,47 @@ def _batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return p.unionByName(shifted)
 
 
-def _dml_table(spark: SparkSession, sf_dir: str) -> ManagedTable:
-    """The mutated table, built once per corpus (cached by fingerprint +
-    final version; a partially-built leftover is rebuilt from scratch —
-    the statement sequence is deterministic, so any complete build is
-    byte-equal in content)."""
-    from ..streaming.windows import _scratch_root
+def _sql_table(
+    spark: SparkSession,
+    sf_dir: str,
+    kind: str,
+    statements,
+    views,
+    sources=("orders",),
+    **table_kwargs,
+) -> ManagedTable:
+    """Orders table ``t`` mutated by ``statements`` through a
+    SqlSession, built once per corpus as a scratch fixture. ``views``
+    maps each temp view the statements read to a function
+    ``(spark, sf_dir) -> DataFrame``; ``sources`` names every table they
+    load. ``statements`` may also hold callables, run on the table
+    between statements."""
 
-    h = _corpus_fingerprint(sf_dir)
-    loc = os.path.join(_scratch_root(), f"sqldml_tbl_{h}")
-    table = ManagedTable(spark, "t", loc)
-    v = table.current_version()
-    if v == _FINAL_VERSION:
-        return table
-    if v >= 0:  # partial build from a crashed run: start over
-        shutil.rmtree(loc, ignore_errors=True)
-        table = ManagedTable(spark, "t", loc)
-    try:
+    def build(table):
         table.overwrite(load(spark, sf_dir, "orders").select(*_COLS))
         sess = SqlSession(spark)
         sess.register(table)
-        _batch(spark, sf_dir).createOrReplaceTempView("batch")
-        sess.sql(_DELETE)  # v1 — DV path, no file rewrite
-        sess.sql(_UPDATE)  # v2 — DV + appended rewrites, one commit
-        sess.sql(_MERGE)   # v3 — keyed upsert
-    except ConcurrentWriteError:
-        pass  # concurrent builder won; the sequence is deterministic
-    return table
+        for name, view in views.items():
+            view(spark, sf_dir).createOrReplaceTempView(name)
+        for stmt in statements:
+            if callable(stmt):
+                stmt(table)
+            else:
+                sess.sql(stmt)
+
+    return scratch_table(
+        spark, kind, inputs(sf_dir, *sources), None, build, name="t",
+        **table_kwargs,
+    )
+
+
+def _dml_table(spark: SparkSession, sf_dir: str) -> ManagedTable:
+    """The mutated table: v1 DV delete (no file rewrite), v2 DV update
+    plus appended rewrites in one commit, v3 keyed MERGE upsert."""
+    return _sql_table(
+        spark, sf_dir, "sqldml_tbl", [_DELETE, _UPDATE, _MERGE],
+        {"batch": _batch},
+    )
 
 
 def table_sql_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -212,45 +222,29 @@ _RW_V3 = (
     "SELECT o_orderkey, o_custkey, o_totalprice + 7 "
     "FROM rw_src WHERE o_orderstatus = 'F'"
 )
-_RW_FINAL_VERSION = 3
+
+
+def _assert_dropped(table: ManagedTable) -> None:
+    rc = table.last_replace_classification
+    assert rc["dropped"] >= 1 and rc["rewritten"] == 0, rc
+
+
+def _assert_rewritten(table: ManagedTable) -> None:
+    rc = table.last_replace_classification
+    assert rc["rewritten"] >= 1, rc
 
 
 def _rw_table(spark: SparkSession, sf_dir: str) -> ManagedTable:
     """Orders partitioned by status, mutated by the three
-    selective-overwrite statements (cached per corpus like
-    :func:`_dml_table`)."""
-    from ..streaming.windows import _scratch_root
-
-    h = _corpus_fingerprint(sf_dir)
-    loc = os.path.join(_scratch_root(), f"rw_tbl_{h}")
-    table = ManagedTable(
-        spark, "t", loc, partition_columns=["o_orderstatus"]
+    selective-overwrite statements: v1 partition-aligned (a
+    metadata-only drop), v2 straddling (a remainder rewrite), v3 a
+    static-partition INSERT OVERWRITE."""
+    return _sql_table(
+        spark, sf_dir, "rw_tbl",
+        [_RW_V1, _assert_dropped, _RW_V2, _assert_rewritten, _RW_V3],
+        {"rw_src": lambda s, d: load(s, d, "orders").select(*_COLS)},
+        partition_columns=["o_orderstatus"],
     )
-    v = table.current_version()
-    if v == _RW_FINAL_VERSION:
-        return table
-    if v >= 0:  # partial build from a crashed run: start over
-        shutil.rmtree(loc, ignore_errors=True)
-        table = ManagedTable(
-            spark, "t", loc, partition_columns=["o_orderstatus"]
-        )
-    try:
-        table.overwrite(load(spark, sf_dir, "orders").select(*_COLS))
-        sess = SqlSession(spark)
-        sess.register(table)
-        load(spark, sf_dir, "orders").select(*_COLS).createOrReplaceTempView(
-            "rw_src"
-        )
-        sess.sql(_RW_V1)  # v1 — partition-aligned: metadata-only drop
-        rc = table.last_replace_classification
-        assert rc["dropped"] >= 1 and rc["rewritten"] == 0, rc
-        sess.sql(_RW_V2)  # v2 — straddling: remainder rewrite
-        rc = table.last_replace_classification
-        assert rc["rewritten"] >= 1, rc
-        sess.sql(_RW_V3)  # v3 — static-partition INSERT OVERWRITE
-    except ConcurrentWriteError:
-        pass  # concurrent builder won; the sequence is deterministic
-    return table
 
 
 def table_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -337,7 +331,6 @@ _MS_STMT = (
     "WHEN NOT MATCHED BY SOURCE AND o_orderstatus = 'F' "
     "THEN UPDATE SET o_custkey = 0"
 )
-_MS_FINAL_VERSION = 1
 
 
 def _ms_snap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -347,26 +340,9 @@ def _ms_snap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ms_table(spark: SparkSession, sf_dir: str) -> ManagedTable:
-    from ..streaming.windows import _scratch_root
-
-    h = _corpus_fingerprint(sf_dir)
-    loc = os.path.join(_scratch_root(), f"msync_tbl_{h}")
-    table = ManagedTable(spark, "t", loc)
-    v = table.current_version()
-    if v == _MS_FINAL_VERSION:
-        return table
-    if v >= 0:
-        shutil.rmtree(loc, ignore_errors=True)
-        table = ManagedTable(spark, "t", loc)
-    try:
-        table.overwrite(load(spark, sf_dir, "orders").select(*_COLS))
-        sess = SqlSession(spark)
-        sess.register(table)
-        _ms_snap(spark, sf_dir).createOrReplaceTempView("snap")
-        sess.sql(_MS_STMT)
-    except ConcurrentWriteError:
-        pass
-    return table
+    return _sql_table(
+        spark, sf_dir, "msync_tbl", [_MS_STMT], {"snap": _ms_snap}
+    )
 
 
 def table_merge_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -455,33 +431,18 @@ _SQ_UPDATE = (
     "UPDATE t SET o_totalprice = o_totalprice + 10 "
     "WHERE o_totalprice >= (SELECT MAX(o_totalprice) FROM t) - 50000"
 )
-_SQ_FINAL_VERSION = 2
 
 
 def _sq_table(spark: SparkSession, sf_dir: str) -> ManagedTable:
-    from ..streaming.windows import _scratch_root
-
-    h = _corpus_fingerprint(sf_dir)
-    loc = os.path.join(_scratch_root(), f"sqdml_tbl_{h}")
-    table = ManagedTable(spark, "t", loc)
-    v = table.current_version()
-    if v == _SQ_FINAL_VERSION:
-        return table
-    if v >= 0:
-        shutil.rmtree(loc, ignore_errors=True)
-        table = ManagedTable(spark, "t", loc)
-    try:
-        table.overwrite(load(spark, sf_dir, "orders").select(*_COLS))
-        sess = SqlSession(spark)
-        sess.register(table)
-        load(spark, sf_dir, "customer").select(
+    """v1 a DV delete via an anti/semi-join plan, v2 an update whose
+    scalar subquery sees the post-delete ``t``."""
+    return _sql_table(
+        spark, sf_dir, "sqdml_tbl", [_SQ_DELETE, _SQ_UPDATE],
+        {"cust_src": lambda s, d: load(s, d, "customer").select(
             "c_custkey", "c_acctbal"
-        ).createOrReplaceTempView("cust_src")
-        sess.sql(_SQ_DELETE)  # v1 — DV delete via anti/semi-join plan
-        sess.sql(_SQ_UPDATE)  # v2 — scalar subquery sees post-delete t
-    except ConcurrentWriteError:
-        pass
-    return table
+        )},
+        sources=("orders", "customer"),
+    )
 
 
 def table_dml_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -20,6 +20,7 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..signature import source_signature
 from ._util import cents, load, rnd
 
 
@@ -602,18 +603,13 @@ def tpch_q21_suppliers_kept_waiting(spark: SparkSession, sf_dir: str) -> DataFra
 # supplier row count per (session, corpus): each of the four partsupp
 # consumers (q2/q11/q16/q20) needs the same scalar; one count() action
 # per session instead of one per call (VERDICT r05 item 4). Keyed on
-# the file's identity so a regenerated corpus invalidates.
-_supplier_count_cache: dict[tuple[str, str, int, int], int] = {}
+# the file's source signature so a regenerated corpus invalidates.
+_supplier_count_cache: dict[tuple[str, str, str], int] = {}
 
 
 def _supplier_count(spark: SparkSession, sf_dir: str) -> int:
     path = os.path.join(os.path.abspath(sf_dir), "supplier.parquet")
-    try:
-        st = os.stat(path)
-        ident = (st.st_mtime_ns, st.st_size)
-    except OSError:
-        ident = (0, 0)
-    key = (spark.sparkContext.applicationId, path, *ident)
+    key = (spark.sparkContext.applicationId, path, source_signature(path))
     n = _supplier_count_cache.get(key)
     if n is None:
         n = load(spark, sf_dir, "supplier").count()

@@ -71,34 +71,31 @@ def formats_multiformat_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`read_table`, unioned and aggregated — the result must be
     value-exact against plain SQL over the parquet source, proving
     every format preserves BIGINT keys, full-precision doubles
-    (shortest-repr round-trip), and dates. Scratch fixtures are
-    written once per corpus (cached by fingerprint); the read side is
-    the production path (pushdown-capable native readers, never
-    schema inference)."""
+    (shortest-repr round-trip), and dates. The three format copies are
+    a scratch fixture, written once per corpus; the read side is the
+    production path (pushdown-capable native readers, never schema
+    inference)."""
     import os
 
     from pyspark.sql import functions as F
 
     from ..queries._util import cents, load
-    from ..queries.managed_scan import _corpus_fingerprint
-    from ..streaming.windows import _scratch_root
+    from ..scratch import inputs, scratch_dir
 
-    h = _corpus_fingerprint(sf_dir)
-    root = os.path.join(_scratch_root(), f"fmt_{h}")
     base = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderdate"
     )
     schema = base.schema
-    marker = os.path.join(root, "_READY")
-    if not os.path.exists(marker):
+
+    def build(d):
         for i, fmt in enumerate(("orc", "csv", "json")):
             write_table(
                 base.where(F.col("o_orderkey") % 3 == i),
-                os.path.join(root, fmt),
+                os.path.join(d, fmt),
                 fmt,
             )
-        with open(marker, "w") as f:
-            f.write("ok")
+
+    root = scratch_dir("fmt", inputs(sf_dir, "orders"), None, build)
     parts = [
         read_table(
             spark, os.path.join(root, fmt), fmt,

@@ -108,9 +108,10 @@ _CHECKPOINT_INTERVAL = 10
 # Below this file count the per-file Python loop on the driver is
 # faster than a Spark job; above it the stats evaluation moves to
 # executors — at millions of files the driver loop is Delta's
-# pre-checkpoint latency cliff. Measured crossover
-# (scripts/measure_distributed_prune.py, 10k files): driver loop
-# ~9.4 µs/file (94 ms at 10k) vs ~1 s Spark job floor → ~100k files.
+# pre-checkpoint latency cliff. Measured crossover at 10k files
+# (scripts/measure_distributed_prune.py, last held at commit aaebf3b):
+# driver loop ~9.4 µs/file (94 ms at 10k) vs ~1 s Spark job floor →
+# ~100k files.
 _DISTRIBUTED_PRUNE_MIN_FILES = 100_000
 _CKPT_DIR = "_checkpoints"
 # Bloom-filter file index (Databricks `CREATE BLOOMFILTER INDEX` /

@@ -15,7 +15,6 @@ trigger a processing-time cadence; the sink-side code is unchanged.
 
 from __future__ import annotations
 
-import hashlib
 import os
 import tempfile
 import uuid
@@ -23,6 +22,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..scratch import inputs, scratch_dir, scratch_table, scratch_tmp
 from ..sources.tables import ManagedTable
 
 
@@ -81,10 +81,10 @@ def stream_events_to_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     time and the table still holds exactly one copy of every event: the
     exactly-once guarantee comes from the merge (anti-join on
     ``event_id``), not from checkpoint bookkeeping. The table location
-    is keyed on the corpus fingerprint so a regenerated source gets a
-    fresh table rather than merging into stale rows. The drained table
-    IS the events table — hash-checkable against ``SELECT * FROM
-    events``.
+    is a scratch fixture keyed on the source, so a regenerated source
+    gets a fresh table rather than merging into stale rows; the build
+    is the first drain. The drained table IS the events table —
+    hash-checkable against ``SELECT * FROM events``.
 
     Write hygiene (BENCH_r05 "What's wrong 2"): the table is
     PARTITIONED by event_type, so a micro-batch rewrites only the
@@ -95,52 +95,34 @@ def stream_events_to_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     across batches or re-runs — a re-drain of an already-ingested
     source costs one anti-join probe, not O(table) rewrites.
     """
-    from .windows import _scratch_root, _stream_events
+    from .windows import _stream_events
 
-    src = os.path.join(os.path.abspath(sf_dir), "events.parquet")
-    try:
-        if os.path.isdir(src):
-            fp = str(
-                sorted(
-                    (n, os.stat(os.path.join(src, n)).st_mtime_ns)
-                    for n in os.listdir(src)
-                )
+    def drain(table):
+        events = _stream_events(spark, sf_dir)
+
+        def sink(batch_df: DataFrame, batch_id: int) -> None:
+            if not table.exists():
+                table.create_if_not_exists(batch_df.schema)
+            table.merge_insert_only(batch_df, match_columns=["event_id"])
+
+        with scratch_tmp("stream-tbl-ckpt") as ckpt:
+            q = (
+                events.writeStream.foreachBatch(sink)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
             )
-        else:
-            st = os.stat(src)
-            fp = f"{st.st_mtime_ns}:{st.st_size}"
-    except OSError:
-        fp = "missing"
-    # layout is part of the key: a relocated layout change (e.g. the
-    # r06 partition-by-event_type) must get a fresh table, not merge
-    # partitioned writes into an unpartitioned manifest
-    h = hashlib.md5(f"{src}|{fp}|pby=event_type,rv=2".encode()).hexdigest()[:10]
-    loc = os.path.join(_scratch_root(), f"stream_tbl_{h}")
-    table = ManagedTable(
-        spark,
-        f"stream_events_{h}",
-        loc,
-        partition_columns=["event_type"],
-        retain_versions=2,
-    )
+            q.awaitTermination()
 
-    events = _stream_events(spark, sf_dir)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if not table.exists():
-            table.create_if_not_exists(batch_df.schema)
-        table.merge_insert_only(batch_df, match_columns=["event_id"])
-
-    ckpt = os.path.join(
-        _scratch_root(), "ckpt", f"stream_tbl_{uuid.uuid4().hex[:8]}"
+    # the layout is part of the key: a layout change gets a fresh
+    # table instead of merging partitioned writes into an
+    # unpartitioned manifest
+    table = scratch_table(
+        spark, "stream_tbl", inputs(sf_dir, "events"),
+        "pby=event_type,rv=2", drain,
+        partition_columns=["event_type"], retain_versions=2,
     )
-    q = (
-        events.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(table)
     return table.read()
 
 
@@ -152,47 +134,34 @@ def _chunked_events_dir(spark: SparkSession, sf_dir: str, chunks: int = 2) -> st
     ascending mtimes, so an availableNow drain with
     ``maxFilesPerTrigger=1`` processes a DETERMINISTIC multi-batch
     sequence — the shape a real incremental landing zone has, which a
-    single-file source (one giant batch) would never exercise. Staged
-    once per corpus fingerprint; ts is pre-converted to a micros
-    timestamp so the stream schema needs no nanos handling."""
-    import shutil as _shutil
+    single-file source (one giant batch) would never exercise. A
+    scratch fixture keyed on the source; ts is pre-converted to a
+    micros timestamp so the stream schema needs no nanos handling."""
+    import shutil
 
     from ..queries._util import load
-    from .windows import _scratch_root
 
-    src = os.path.join(os.path.abspath(sf_dir), "events.parquet")
-    try:
-        st = os.stat(src)
-        fp = f"{st.st_mtime_ns}:{st.st_size}" if os.path.isfile(src) else str(
-            sorted(os.listdir(src))
-        )
-    except OSError:
-        fp = "missing"
-    h = hashlib.md5(f"{src}|{fp}|chunks={chunks}".encode()).hexdigest()[:10]
-    d = os.path.join(_scratch_root(), f"gold_src_{h}")
-    done = os.path.join(d, "_STAGED")
-    if os.path.exists(done):
-        return d
-    events = load(spark, sf_dir, "events")
-    os.makedirs(d, exist_ok=True)
-    for i in range(chunks):
-        part = events.filter(
-            F.pmod(F.abs(F.hash("event_id")), F.lit(chunks)) == i
-        )
-        tmp = os.path.join(d, f"_tmp_{i}")
-        part.coalesce(1).write.mode("overwrite").parquet(tmp)
-        src_file = next(
-            f for f in os.listdir(tmp)
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        )
-        dst = os.path.join(d, f"chunk_{i}.parquet")
-        os.replace(os.path.join(tmp, src_file), dst)
-        _shutil.rmtree(tmp, ignore_errors=True)
-        # ascending mtimes pin the file-stream batch order
-        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-    with open(done, "w") as f:
-        f.write(fp)
-    return d
+    def build(d):
+        events = load(spark, sf_dir, "events")
+        for i in range(chunks):
+            part = events.filter(
+                F.pmod(F.abs(F.hash("event_id")), F.lit(chunks)) == i
+            )
+            tmp = os.path.join(d, f"_tmp_{i}")
+            part.coalesce(1).write.mode("overwrite").parquet(tmp)
+            src_file = next(
+                f for f in os.listdir(tmp)
+                if f.endswith(".parquet") and not f.startswith(("_", "."))
+            )
+            dst = os.path.join(d, f"chunk_{i}.parquet")
+            os.replace(os.path.join(tmp, src_file), dst)
+            shutil.rmtree(tmp, ignore_errors=True)
+            # ascending mtimes pin the file-stream batch order
+            os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
+
+    return scratch_dir(
+        "gold_src", inputs(sf_dir, "events"), {"chunks": chunks}, build
+    )
 
 
 def stream_gold_aggregate(
@@ -286,20 +255,16 @@ def stream_gold_counts_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents, no float accumulation). A re-run replays every batch against
     the cached table and the txn watermarks skip them all: the rerun
     costs O(probe), and the values cannot drift."""
-    from .windows import _scratch_root
-
     src_dir = _chunked_events_dir(spark, sf_dir, chunks=2)
-    h = hashlib.md5(f"{src_dir}|gold_v1".encode()).hexdigest()[:10]
-    table = ManagedTable(
-        spark,
-        f"gold_counts_{h}",
-        os.path.join(_scratch_root(), f"gold_tbl_{h}"),
-        retain_versions=2,
+
+    def drain(table):
+        with scratch_tmp("gold-tbl-ckpt") as ckpt:
+            stream_gold_aggregate(spark, src_dir, table, ckpt)
+
+    table = scratch_table(
+        spark, "gold_tbl", [src_dir], "gold_v1", drain, retain_versions=2
     )
-    ckpt = os.path.join(
-        _scratch_root(), "ckpt", f"gold_tbl_{uuid.uuid4().hex[:8]}"
-    )
-    stream_gold_aggregate(spark, src_dir, table, ckpt)
+    drain(table)
     return table.read().select(
         "event_type",
         # date→timestamp for the cross-engine compare (house convention:

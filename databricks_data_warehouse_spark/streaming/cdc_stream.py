@@ -129,47 +129,36 @@ def stream_apply_changes_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     apply must no-op all of them (exactly-once WITHOUT a transaction
     watermark). Final state ≡ the batch SCD1 fixpoint, so the oracle
     is shared with ``table_apply_changes_scd1``."""
-    import shutil
-
     from pyspark.sql import functions as F
 
     from ..queries._util import cents
-    from ..queries.managed_scan import _corpus_fingerprint
-    from .windows import _scratch_root
+    from ..scratch import inputs, scratch_table, scratch_tmp
 
-    h = _corpus_fingerprint(sf_dir)
-    loc = os.path.join(_scratch_root(), f"cdcstream_tbl2_{h}")
-    t = ManagedTable(spark, "cdcs", loc)
-    if t.current_version() != 2:
-        if t.current_version() >= 0:
-            shutil.rmtree(loc, ignore_errors=True)
-            t = ManagedTable(spark, "cdcs", loc)
-        land = os.path.join(_scratch_root(), f"cdcstream_land2_{h}")
-        shutil.rmtree(land, ignore_errors=True)
-        os.makedirs(land)
-        _land_cdc_files(spark, sf_dir, land)
-        try:
-            stream_apply_changes(
-                spark, land, t, ["k"], "seq", _CDC_SCHEMA,
-                apply_as_deletes="op = 'delete'", except_columns=["op"],
-            )
+    def drain(t, land, ckpt):
+        stream_apply_changes(
+            spark, land, t, ["k"], "seq", _CDC_SCHEMA,
+            apply_as_deletes="op = 'delete'", except_columns=["op"],
+            checkpoint_dir=ckpt,
+        )
+
+    def build(t):
+        with scratch_tmp("cdcstream-work") as work:
+            land = os.path.join(work, "land")
+            os.makedirs(land)
+            _land_cdc_files(spark, sf_dir, land)
+            drain(t, land, os.path.join(work, "ckpt_a"))
             # second drain: FRESH checkpoint → total re-delivery; the
             # sequence rule must make every batch a no-op
             v = t.current_version()
-            stream_apply_changes(
-                spark, land, t, ["k"], "seq", _CDC_SCHEMA,
-                apply_as_deletes="op = 'delete'", except_columns=["op"],
-            )
+            drain(t, land, os.path.join(work, "ckpt_b"))
             assert t.current_version() == v, (
                 "re-delivered CDC batches were not no-ops"
             )
-        except ConcurrentWriteError:
-            # concurrent builder won; its deterministic build ends at
-            # version 2 — wait for THAT commit, not whatever half-built
-            # intermediate exists right now
-            from .windows import _await_table_version
 
-            _await_table_version(t, 2)
+    t = scratch_table(
+        spark, "cdcstream_tbl", inputs(sf_dir, "orders"), None, build,
+        name="cdcs",
+    )
     return (
         scd1_current(t)
         .groupBy((F.col("k") % 7).alias("grp"))

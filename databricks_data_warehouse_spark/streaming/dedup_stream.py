@@ -33,7 +33,6 @@ from __future__ import annotations
 import hashlib
 import os
 import re
-import shutil
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -131,51 +130,12 @@ def _update_simhash_dedup(key, pdf_iter, state: GroupState):
 def _stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents as a bounded file stream (flat-staged like the events
     source in windows.py — the file source lists only the top level)."""
-    from .windows import _scratch_root
+    from ..queries._util import read_parquet
+    from .windows import _stream_source_dir
 
+    d = _stream_source_dir(sf_dir, "documents")
     src = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
-    h = hashlib.md5(f"docs|{src}".encode()).hexdigest()[:8]
-    d = os.path.join(_scratch_root(), f"stream_docs_{h}")
-    os.makedirs(d, exist_ok=True)
-    if os.path.isdir(src):
-        want = {
-            name: os.path.join(src, name)
-            for name in os.listdir(src)
-            if name.endswith(".parquet") and not name.startswith((".", "_"))
-        }
-    else:
-        want = {"documents.parquet": src}
-    # same reconcile discipline as windows._stream_source_dir (round-12
-    # review 4): staged names that LEFT the source set must go (a
-    # regenerated documents.parquet has fresh uuid part names, leaving
-    # the old stage entries as dangling symlinks that crash the file
-    # stream or, worse, stale copies that feed extra rows), and a
-    # same-name file whose source changed must re-stage.
-    for name in os.listdir(d):
-        dst = os.path.join(d, name)
-        if name not in want:
-            os.remove(dst)
-            continue
-        if os.path.islink(dst):
-            if not os.path.exists(dst):  # dangling: target regenerated
-                os.remove(dst)
-        else:
-            s, t = os.stat(want[name]), os.stat(dst)
-            if s.st_mtime > t.st_mtime or s.st_size != t.st_size:
-                os.remove(dst)
-    for name, target in want.items():
-        dst = os.path.join(d, name)
-        if os.path.exists(dst):
-            continue
-        try:
-            if os.path.lexists(dst):
-                os.remove(dst)  # dangling link remnant
-            os.symlink(target, dst)
-        except OSError:
-            shutil.copy2(target, dst)
-    from .windows import _parquet_schema
-
-    schema = _parquet_schema(spark, src)
+    schema = read_parquet(spark, src).schema
     return spark.readStream.schema(schema).parquet(d)
 
 

@@ -18,8 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..queries._util import cents, load
-from ..queries.managed_scan import _corpus_fingerprint
-from ..sources.tables import ConcurrentWriteError, ManagedTable
+from ..scratch import inputs, scratch_table
+from ..sources.tables import ManagedTable
 
 
 def _drain(q) -> None:
@@ -38,28 +38,18 @@ def _drain(q) -> None:
 
 def _source_table(spark: SparkSession, sf_dir: str) -> ManagedTable:
     """Orders landed as two commits — 4/5 of the keys in the initial
-    overwrite, the rest appended — cached per corpus fingerprint."""
-    from .windows import _scratch_root
+    overwrite, the rest appended — built once per corpus."""
 
-    h = _corpus_fingerprint(sf_dir)
-    loc = os.path.join(_scratch_root(), f"stream_src_tbl_{h}")
-    table = ManagedTable(spark, f"orders_src_{h}", loc)
-    if table.current_version() < 1:
-        try:
-            orders = load(spark, sf_dir, "orders").select(
-                "o_orderkey", "o_orderstatus", "o_totalprice"
-            )
-            table.overwrite(orders.where(F.col("o_orderkey") % 5 != 0))
-            table.append(orders.where(F.col("o_orderkey") % 5 == 0))
-        except ConcurrentWriteError:
-            # concurrent builder won (same deterministic layout) — but
-            # it may still be mid-build: wait for its LAST commit (v1,
-            # the append) before reading, or the aggregate would see a
-            # half-built table
-            from .windows import _await_table_version
+    def build(t):
+        orders = load(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_orderstatus", "o_totalprice"
+        )
+        t.overwrite(orders.where(F.col("o_orderkey") % 5 != 0))
+        t.append(orders.where(F.col("o_orderkey") % 5 == 0))
 
-            _await_table_version(table, 1)
-    return table
+    return scratch_table(
+        spark, "stream_src_tbl", inputs(sf_dir, "orders"), None, build
+    )
 
 
 def stream_table_source(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -122,11 +112,12 @@ def stream_table_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     (_change_type, _commit_version) group, values via the keyed
     sum)."""
     from ..queries.sql_dml_query import _dml_table
+    from .windows import _scratch_root
 
     table = _dml_table(spark, sf_dir)
     run = uuid.uuid4().hex[:8]
-    out = os.path.join(_scratch_dir(), "stream_cdf_out", run)
-    ckpt = os.path.join(_scratch_dir(), "stream_cdf_ckpt", run)
+    out = os.path.join(_scratch_root(), "stream_cdf_out", run)
+    ckpt = os.path.join(_scratch_root(), "stream_cdf_ckpt", run)
     q = (
         table.read_change_stream(starting_version=0)
         .writeStream.format("parquet")
@@ -161,12 +152,6 @@ def stream_table_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(out, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
     return spark.createDataFrame(rows, agg.schema)
-
-
-def _scratch_dir() -> str:
-    from .windows import _scratch_root
-
-    return _scratch_root()
 
 
 def stream_table_cdf_oracle() -> str:

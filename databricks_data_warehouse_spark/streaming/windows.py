@@ -27,7 +27,6 @@ sink for a Delta/parquet sink and the pipeline is production-shaped.
 
 from __future__ import annotations
 
-import hashlib
 import itertools
 import os
 import shutil
@@ -47,26 +46,10 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..queries._util import cents
+from ..queries._util import cents, read_parquet
+from ..scratch import inputs, scratch_dir
 
 _sink_ids = itertools.count()
-
-
-def _await_table_version(table, v_min: int, timeout: float = 180) -> None:
-    """A fixture builder that LOST a concurrent-build race must not
-    proceed against a half-built table (round-12 review 4: the winner
-    may have committed its overwrite but not yet its append) — poll
-    until the winner's last expected commit lands."""
-    import time
-
-    deadline = time.time() + timeout
-    while table.current_version() < v_min:
-        if time.time() >= deadline:
-            raise TimeoutError(
-                f"concurrent fixture builder of {table.name} did not "
-                f"reach version {v_min} within {timeout}s"
-            )
-        time.sleep(0.25)
 
 
 def _scratch_root() -> str:
@@ -86,99 +69,45 @@ def _scratch_root() -> str:
     return os.path.join(tempfile.gettempdir(), "ddws_scratch")
 
 
-def _stream_source_dir(sf_dir: str) -> str:
-    """The file streaming source requires a DIRECTORY of data files to
-    list; the testdata ships ``events.parquet`` either as a single file
-    or as a Spark-written directory of part files. Stage a per-sf_dir
-    scratch directory holding FLAT symlinks (copies if symlinks are
-    unavailable) to every data file — a stand-in for the landing
-    directory a production deployment would stream from.
+def _stream_source_dir(sf_dir: str, name: str) -> str:
+    """A directory the file stream source can list for the
+    ``<name>.parquet`` table, which the testdata ships either as a
+    single file or as a Spark-written directory of part files: FLAT
+    symlinks (copies where symlinks are unavailable) to every data
+    file, a stand-in for the landing directory a production deployment
+    would stream from. Flat matters: symlinking a *directory* puts the
+    part files one level down, where the file stream source's listing
+    never looks, and the stream silently reads 0 rows. It is a scratch
+    fixture keyed on the source, so a regenerated source gets a fresh
+    directory."""
+    [src] = inputs(os.path.abspath(sf_dir), name)
 
-    Flat staging matters: symlinking a *directory* under the staging
-    dir puts the part files one level down, where the file stream
-    source's listing never looks — the stream silently reads 0 rows
-    (observed when the 10× events table was regenerated as a
-    directory). Staging re-syncs whenever the source's file set or any
-    file's (mtime, size) changes, so a regenerated source never leaves
-    a stale or half-empty staging dir behind.
-    """
-    src = os.path.join(sf_dir, "events.parquet")
-    h = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    d = os.path.join(_scratch_root(), f"stream_{h}")
-    os.makedirs(d, exist_ok=True)
-    if os.path.isdir(src):
-        want = {
-            name: os.path.join(src, name)
-            for name in os.listdir(src)
-            if name.endswith(".parquet") and not name.startswith((".", "_"))
-        }
-    else:
-        want = {"events.parquet": src}
-    for name in os.listdir(d):
-        dst = os.path.join(d, name)
-        if name not in want:
-            os.remove(dst)
-            continue
-        if not os.path.islink(dst):  # symlinks track the source; copies go stale
-            s, t = os.stat(want[name]), os.stat(dst)
-            if s.st_mtime > t.st_mtime or s.st_size != t.st_size:
-                os.remove(dst)
-    for name, path in want.items():
-        dst = os.path.join(d, name)
-        if not os.path.exists(dst):
-            try:
-                os.symlink(path, dst)
-            except OSError:
-                shutil.copy2(path, dst)
-    return d
-
-
-# (application id, path, mtime, size) → parquet schema. Every stream
-# entry re-derived the source schema with a full batch-read (file
-# listing + footer parse, ~0.15 s); the schema is FILE METADATA —
-# invalidated by any rewrite via the stat key — not a query result, so
-# caching it is the same class as the partition-tuple listings in
-# sources/tables.py.
-_schema_cache: dict = {}
-
-
-def _parquet_schema(spark: SparkSession, path: str):
-    """Cached-by-stat parquet schema of ``path`` (see _schema_cache)."""
-    try:
-        if os.path.isdir(path):
-            ident = tuple(
-                sorted(
-                    (n, os.stat(os.path.join(path, n)).st_mtime_ns)
-                    for n in os.listdir(path)
-                    if not n.startswith((".", "_"))
-                )
-            )
+    def build(d):
+        if os.path.isdir(src):
+            files = [
+                os.path.join(src, n)
+                for n in os.listdir(src)
+                if n.endswith(".parquet") and not n.startswith((".", "_"))
+            ]
         else:
-            st = os.stat(path)
-            ident = (st.st_mtime_ns, st.st_size)
-    except OSError:
-        ident = ()
-    key = (spark.sparkContext.applicationId, path, ident)
-    schema = _schema_cache.get(key)
-    if schema is None:
-        schema = spark.read.parquet(path).schema
-        # evict only stale idents of the SAME (app, path): a whole-dict
-        # clear() made the cache single-entry — alternating lookups of
-        # events.parquet and documents.parquet evicted each other and
-        # re-paid the schema read every call (ADVICE r15)
-        for k in [k for k in _schema_cache if k[:2] == key[:2] and k != key]:
-            del _schema_cache[k]
-        _schema_cache[key] = schema
-    return schema
+            files = [src]
+        for f in files:
+            dst = os.path.join(d, os.path.basename(f))
+            try:
+                os.symlink(f, dst)
+            except OSError:
+                shutil.copy2(f, dst)
+
+    return scratch_dir(f"stream_{name}", [src], None, build)
 
 
 def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events as a bounded stream; nanos-long ts converted exactly as the
     batch loader does (queries/_util.load)."""
-    source_dir = _stream_source_dir(sf_dir)
+    source_dir = _stream_source_dir(sf_dir, "events")
     # runtime-set for bare (driver-built) sessions — see queries/_util.load
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = _parquet_schema(spark, os.path.join(sf_dir, "events.parquet"))
+    schema = read_parquet(spark, os.path.join(sf_dir, "events.parquet")).schema
     stream = spark.readStream.schema(schema).parquet(source_dir)
     ts_type = dict(stream.dtypes).get("ts")
     if ts_type == "bigint":

@@ -10,26 +10,11 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from databricks_data_warehouse_spark.scratch import race
 from databricks_data_warehouse_spark.sources.tables import (
     ConcurrentWriteError,
     ManagedTable,
 )
-
-
-def _interpose_once(victim: ManagedTable, racer_commit):
-    """Make the victim's first manifest write lose a REAL version race:
-    before it runs, the racer commits against the same base."""
-    orig = victim._write_manifest
-    state = {"raced": False}
-
-    def interposed(*a, **k):
-        if not state["raced"]:
-            state["raced"] = True
-            racer_commit()
-        return orig(*a, **k)
-
-    victim._write_manifest = interposed
-    return state
 
 
 def test_concurrent_appends_both_succeed(spark, tmp_path):
@@ -38,11 +23,11 @@ def test_concurrent_appends_both_succeed(spark, tmp_path):
     t0.overwrite(spark.createDataFrame([(1,)], "k long"))  # v0
     t1 = ManagedTable(spark, "t", loc)
     t2 = ManagedTable(spark, "t", loc)
-    state = _interpose_once(
+    with race(
         t1, lambda: t2.append(spark.createDataFrame([(2,)], "k long"))
-    )
-    v = t1.append(spark.createDataFrame([(3,)], "k long"))  # rebases
-    assert state["raced"]
+    ) as fired:
+        v = t1.append(spark.createDataFrame([(3,)], "k long"))  # rebases
+    assert fired
     assert v == 2  # racer took v1, the rebase landed v2
     assert sorted(r.k for r in t1.read().collect()) == [1, 2, 3]
 
@@ -57,12 +42,12 @@ def test_append_rebases_over_concurrent_rewrite(spark, tmp_path):
     )
     t1 = ManagedTable(spark, "tr", loc)
     t2 = ManagedTable(spark, "tr", loc)
-    state = _interpose_once(
+    with race(
         t2,
         lambda: t1.delete_where(F.col("k") == 1, deletion_vectors=False),
-    )
-    t2.append(spark.createDataFrame([(9, 9.0)], "k long, v double"))
-    assert state["raced"]
+    ) as fired:
+        t2.append(spark.createDataFrame([(9, 9.0)], "k long, v double"))
+    assert fired
     assert sorted(r.k for r in t2.read().collect()) == [2, 9]
 
 
@@ -75,16 +60,16 @@ def test_non_blind_commit_keeps_first_writer_wins(spark, tmp_path):
     )
     t1 = ManagedTable(spark, "tm", loc)
     t2 = ManagedTable(spark, "tm", loc)
-    _interpose_once(
+    with race(
         t1,
         lambda: t2.append(
             spark.createDataFrame([(9, 9.0)], "k long, v double")
         ),
-    )
-    with pytest.raises(ConcurrentWriteError):
+    ) as fired, pytest.raises(ConcurrentWriteError):
         t1.merge_upsert(
             spark.createDataFrame([(1, 100.0)], "k long, v double"), ["k"]
         )
+    assert fired
     # winner's append is intact; loser's merge staged nothing visible
     assert sorted(r.k for r in t2.read().collect()) == [1, 2, 9]
 
@@ -106,9 +91,9 @@ def test_append_race_against_schema_change_raises(spark, tmp_path):
             spark.createDataFrame([("a", 1)], "s string, n long")
         )
 
-    _interpose_once(t1, replace)
-    with pytest.raises(ConcurrentWriteError):
+    with race(t1, replace) as fired, pytest.raises(ConcurrentWriteError):
         t1.append(spark.createDataFrame([(3,)], "k long"))
+    assert fired
     assert {tuple(r) for r in t2.read().collect()} == {("a", 1)}
 
 
@@ -125,9 +110,11 @@ def test_racing_copy_into_same_files_still_conflicts(spark, tmp_path):
     t0.create_if_not_exists(StructType([StructField("k", LongType())]))
     t1 = ManagedTable(spark, "tc", loc)
     t2 = ManagedTable(spark, "tc", loc)
-    _interpose_once(t1, lambda: t2.copy_into(src))
-    with pytest.raises(ConcurrentWriteError):
+    with race(t1, lambda: t2.copy_into(src)) as fired, pytest.raises(
+        ConcurrentWriteError
+    ):
         t1.copy_into(src)
+    assert fired
     assert t2.read().count() == 10  # loaded exactly once
     # the standard recovery: re-run re-diffs to a no-op
     t3 = ManagedTable(spark, "tc", loc)
@@ -151,9 +138,9 @@ def test_racing_copy_into_disjoint_files_rebases(spark, tmp_path):
     t0.create_if_not_exists(StructType([StructField("k", LongType())]))
     t1 = ManagedTable(spark, "td", loc)
     t2 = ManagedTable(spark, "td", loc)
-    state = _interpose_once(t1, lambda: t2.copy_into(src2))
-    r = t1.copy_into(src1)
-    assert state["raced"] and r["files_loaded"] == 1
+    with race(t1, lambda: t2.copy_into(src2)) as fired:
+        r = t1.copy_into(src1)
+    assert fired and r["files_loaded"] == 1
     assert sorted(x.k for x in t1.read().collect()) == list(range(9))
 
 
@@ -184,21 +171,15 @@ def test_append_rebase_chain_of_collisions(spark, tmp_path):
     t0 = ManagedTable(spark, "tc4", loc)
     t0.overwrite(spark.createDataFrame([(0,)], "k long"))  # v0
     victim = ManagedTable(spark, "tc4", loc)
-    orig = victim._write_manifest
-    state = {"n": 0}
 
-    def interposed(*a, **k):
-        if state["n"] < 4:
-            state["n"] += 1
-            racer = ManagedTable(spark, "tc4", loc)
-            racer.append(
-                spark.createDataFrame([(100 + state["n"],)], "k long")
-            )
-        return orig(*a, **k)
+    def racer(n):
+        return lambda: ManagedTable(spark, "tc4", loc).append(
+            spark.createDataFrame([(100 + n,)], "k long")
+        )
 
-    victim._write_manifest = interposed
-    v = victim.append(spark.createDataFrame([(9,)], "k long"))
-    assert state["n"] == 4
+    with race(victim, *(racer(n) for n in range(1, 5))) as fired:
+        v = victim.append(spark.createDataFrame([(9,)], "k long"))
+    assert len(fired) == 4
     assert v == 5  # four winners took v1-v4; the victim landed v5
     got = sorted(r.k for r in victim.read().collect())
     assert got == [0, 9, 101, 102, 103, 104]

@@ -12,6 +12,7 @@ from databricks_data_warehouse_spark.pipelines.cdc import (
     scd1_current,
     scd2_history,
 )
+from databricks_data_warehouse_spark.scratch import race
 from databricks_data_warehouse_spark.sources.tables import ManagedTable
 
 
@@ -611,20 +612,12 @@ def _race_apply(spark, tmp_path, name, batch1_rows, batch2_rows):
 
     t1 = ManagedTable(spark, name, loc)
     t2 = ManagedTable(spark, name, loc)
-    orig = t1._write_manifest
-    state = {"raced": False}
-
-    def interposed(*a, **k):
-        if not state["raced"]:
-            state["raced"] = True
-            # the racing writer commits FIRST, against the same base
-            apply_changes(t2, df_of(batch2_rows), ["k"], "seq", **kw)
-        return orig(*a, **k)
-
-    t1._write_manifest = interposed
-    with _pytest.raises(ConcurrentWriteError):
+    # the racing writer commits FIRST, against the same base
+    with race(
+        t1, lambda: apply_changes(t2, df_of(batch2_rows), ["k"], "seq", **kw)
+    ) as fired, _pytest.raises(ConcurrentWriteError):
         apply_changes(t1, df_of(batch1_rows), ["k"], "seq", **kw)
-    assert state["raced"]
+    assert fired
     # loser retries on a fresh handle (sees the winner's commit)
     t3 = ManagedTable(spark, name, loc)
     apply_changes(t3, df_of(batch1_rows), ["k"], "seq", **kw)

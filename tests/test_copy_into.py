@@ -15,6 +15,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from databricks_data_warehouse_spark.scratch import race
 from databricks_data_warehouse_spark.sources.sql_dml import SqlSession
 from databricks_data_warehouse_spark.sources.tables import (
     ConcurrentWriteError,
@@ -278,22 +279,13 @@ def test_failed_copy_commit_does_not_poison_the_ledger(spark, table, landing):
     no-ops via the committed ledger)."""
     other = ManagedTable(spark, "cp", table.location, schema=_SCHEMA)
 
-    orig = table._write_manifest
-    state = {"raced": False}
-
-    def interposed(*a, **k):
-        if not state["raced"]:
-            state["raced"] = True
-            # a rename changes column mapping: the blind-append rebase
-            # refuses, so the loser's commit FAILS (not rebases)
-            other.rename_column("s", "s2")
-        return orig(*a, **k)
-
-    table._write_manifest = interposed
-    with pytest.raises(ConcurrentWriteError):
+    # a rename changes column mapping: the blind-append rebase
+    # refuses, so the loser's commit FAILS (not rebases)
+    with race(
+        table, lambda: other.rename_column("s", "s2")
+    ) as fired, pytest.raises(ConcurrentWriteError):
         table.copy_into(landing)
-    assert state["raced"]
-    table._write_manifest = orig
+    assert fired
     # the failed attempt must not have recorded its files as loaded
     res = table.copy_into(landing)
     assert res["files_loaded"] == 2

@@ -17,6 +17,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from databricks_data_warehouse_spark.scratch import race
 from databricks_data_warehouse_spark.sources.tables import (
     ConcurrentWriteError,
     ManagedTable,
@@ -40,22 +41,6 @@ def _handle(spark, tmp_path, name):
     return ManagedTable(
         spark, name, str(tmp_path / name), partition_columns=["p"]
     )
-
-
-def _interpose(loser, fire):
-    """Make ``fire()`` run right before the loser's first manifest
-    claim — a REAL version-number collision, not a simulation."""
-    orig = loser._write_manifest
-    state = {"raced": False}
-
-    def interposed(*a, **k):
-        if not state["raced"]:
-            state["raced"] = True
-            fire()
-        return orig(*a, **k)
-
-    loser._write_manifest = interposed
-    return state
 
 
 def _rows(t):
@@ -95,18 +80,18 @@ def test_disjoint_scoped_merges_both_land(spark, tmp_path):
     t = _mk(spark, tmp_path, "d1")
     loser = _handle(spark, tmp_path, "d1")
     winner = _handle(spark, tmp_path, "d1")
-    state = _interpose(
+    with race(
         loser,
         lambda: winner.merge_upsert(
             spark.createDataFrame([(2, 99, "b")], "k int, v int, p string"),
             ["p", "k"],
         ),
-    )
-    v = loser.merge_upsert(
-        spark.createDataFrame([(1, 77, "a")], "k int, v int, p string"),
-        ["p", "k"],
-    )
-    assert state["raced"] and v == 2
+    ) as fired:
+        v = loser.merge_upsert(
+            spark.createDataFrame([(1, 77, "a")], "k int, v int, p string"),
+            ["p", "k"],
+        )
+    assert fired and v == 2
     assert _rows(t) == [(1, 77, "a"), (2, 99, "b"), (3, 30, "c")]
 
 
@@ -114,18 +99,18 @@ def test_overlapping_scoped_merges_raise(spark, tmp_path):
     t = _mk(spark, tmp_path, "d2")
     loser = _handle(spark, tmp_path, "d2")
     winner = _handle(spark, tmp_path, "d2")
-    _interpose(
+    with race(
         loser,
         lambda: winner.merge_upsert(
             spark.createDataFrame([(1, 99, "a")], "k int, v int, p string"),
             ["p", "k"],
         ),
-    )
-    with pytest.raises(ConcurrentWriteError):
+    ) as fired, pytest.raises(ConcurrentWriteError):
         loser.merge_upsert(
             spark.createDataFrame([(1, 77, "a")], "k int, v int, p string"),
             ["p", "k"],
         )
+    assert fired
     assert _rows(t) == [(1, 99, "a"), (2, 20, "b"), (3, 30, "c")]
 
 
@@ -134,34 +119,21 @@ def test_chained_disjoint_collisions_rebase_each(spark, tmp_path):
     loser = _handle(spark, tmp_path, "d3")
     w1 = _handle(spark, tmp_path, "d3")
     w2 = _handle(spark, tmp_path, "d3")
-    orig = loser._write_manifest
-    state = {"n": 0}
 
-    def interposed(*a, **k):
-        if state["n"] == 0:
-            state["n"] = 1
-            w1.merge_upsert(
-                spark.createDataFrame(
-                    [(2, 21, "b")], "k int, v int, p string"
-                ),
-                ["p", "k"],
-            )
-        elif state["n"] == 1:
-            state["n"] = 2
-            w2.merge_upsert(
-                spark.createDataFrame(
-                    [(3, 31, "c")], "k int, v int, p string"
-                ),
-                ["p", "k"],
-            )
-        return orig(*a, **k)
+    def upsert(w, row):
+        return lambda: w.merge_upsert(
+            spark.createDataFrame([row], "k int, v int, p string"),
+            ["p", "k"],
+        )
 
-    loser._write_manifest = interposed
-    v = loser.merge_upsert(
-        spark.createDataFrame([(1, 11, "a")], "k int, v int, p string"),
-        ["p", "k"],
-    )
-    assert state["n"] == 2 and v == 3
+    with race(
+        loser, upsert(w1, (2, 21, "b")), upsert(w2, (3, 31, "c"))
+    ) as fired:
+        v = loser.merge_upsert(
+            spark.createDataFrame([(1, 11, "a")], "k int, v int, p string"),
+            ["p", "k"],
+        )
+    assert len(fired) == 2 and v == 3
     assert _rows(t) == [(1, 11, "a"), (2, 21, "b"), (3, 31, "c")]
 
 
@@ -171,19 +143,19 @@ def test_disjoint_merge_delete_races_merge(spark, tmp_path):
     t = _mk(spark, tmp_path, "d4")
     loser = _handle(spark, tmp_path, "d4")
     winner = _handle(spark, tmp_path, "d4")
-    state = _interpose(
+    with race(
         loser,
         lambda: winner.merge_upsert(
             spark.createDataFrame([(2, 99, "b")], "k int, v int, p string"),
             ["p", "k"],
         ),
-    )
-    loser.merge_delete(
-        spark.createDataFrame([(1, "a")], "k int, p string"),
-        ["p", "k"],
-        deletion_vectors=False,
-    )
-    assert state["raced"]
+    ) as fired:
+        loser.merge_delete(
+            spark.createDataFrame([(1, "a")], "k int, p string"),
+            ["p", "k"],
+            deletion_vectors=False,
+        )
+    assert fired
     assert _rows(t) == [(2, 99, "b"), (3, 30, "c")]
 
 
@@ -193,15 +165,15 @@ def test_append_only_flip_mid_flight_refuses_rebase(spark, tmp_path):
     t = _mk(spark, tmp_path, "d5")
     loser = _handle(spark, tmp_path, "d5")
     winner = _handle(spark, tmp_path, "d5")
-    _interpose(
+    with race(
         loser,
         lambda: winner.set_properties({"delta.appendOnly": "true"}),
-    )
-    with pytest.raises(ConcurrentWriteError):
+    ) as fired, pytest.raises(ConcurrentWriteError):
         loser.merge_update(
             spark.createDataFrame([(1, 99, "a")], "k int, v int, p string"),
             ["p", "k"],
         )
+    assert fired
 
 
 # --------------------------------------- read-snapshot serializability
@@ -271,17 +243,17 @@ def test_replace_where_races_in_region_append(spark, tmp_path):
     t = _mk(spark, tmp_path, "r1")
     loser = _handle(spark, tmp_path, "r1")
     winner = _handle(spark, tmp_path, "r1")
-    _interpose(
+    with race(
         loser,
         lambda: winner.append(
             spark.createDataFrame([(9, 90, "a")], "k int, v int, p string")
         ),
-    )
-    with pytest.raises(ConcurrentWriteError):
+    ) as fired, pytest.raises(ConcurrentWriteError):
         loser.replace_where(
             spark.createDataFrame([(7, 70, "a")], "k int, v int, p string"),
             [("p", "=", "a")],
         )
+    assert fired
     assert (9, 90, "a") in _rows(t)
 
 
@@ -290,17 +262,17 @@ def test_replace_where_races_out_of_region_append(spark, tmp_path):
     t = _mk(spark, tmp_path, "r2")
     loser = _handle(spark, tmp_path, "r2")
     winner = _handle(spark, tmp_path, "r2")
-    state = _interpose(
+    with race(
         loser,
         lambda: winner.append(
             spark.createDataFrame([(9, 90, "b")], "k int, v int, p string")
         ),
-    )
-    loser.replace_where(
-        spark.createDataFrame([(7, 70, "a")], "k int, v int, p string"),
-        [("p", "=", "a")],
-    )
-    assert state["raced"]
+    ) as fired:
+        loser.replace_where(
+            spark.createDataFrame([(7, 70, "a")], "k int, v int, p string"),
+            [("p", "=", "a")],
+        )
+    assert fired
     assert _rows(t) == [
         (2, 20, "b"),
         (3, 30, "c"),
@@ -322,15 +294,15 @@ def test_optimize_races_disjoint_merge(spark, tmp_path):
     t.append(spark.createDataFrame([(5, 50, "a")], "k int, v int, p string"))
     loser = _handle(spark, tmp_path, "m1")
     winner = _handle(spark, tmp_path, "m1")
-    state = _interpose(
+    with race(
         loser,
         lambda: winner.merge_upsert(
             spark.createDataFrame([(2, 99, "b")], "k int, v int, p string"),
             ["p", "k"],
         ),
-    )
-    v = loser.optimize(min_small_files=2, where=[("p", "=", "a")])
-    assert state["raced"] and v == loser.current_version()
+    ) as fired:
+        v = loser.optimize(min_small_files=2, where=[("p", "=", "a")])
+    assert fired and v == loser.current_version()
     assert _rows(t) == [
         (1, 10, "a"),
         (2, 99, "b"),
@@ -348,14 +320,14 @@ def test_optimize_conflicts_with_append_into_same_partition(spark, tmp_path):
     t.append(spark.createDataFrame([(4, 40, "a")], "k int, v int, p string"))
     loser = _handle(spark, tmp_path, "m2")
     winner = _handle(spark, tmp_path, "m2")
-    _interpose(
+    with race(
         loser,
         lambda: winner.append(
             spark.createDataFrame([(9, 90, "a")], "k int, v int, p string")
         ),
-    )
-    with pytest.raises(ConcurrentWriteError):
+    ) as fired, pytest.raises(ConcurrentWriteError):
         loser.optimize(min_small_files=2, where=[("p", "=", "a")])
+    assert fired
     assert (9, 90, "a") in _rows(t)  # the append won; nothing lost
 
 
@@ -472,15 +444,15 @@ def test_cluster_races_disjoint_merge(spark, tmp_path):
     winner = ManagedTable(
         spark, name, str(tmp_path / name), partition_columns=["p"]
     )
-    state = _interpose(
+    with race(
         loser,
         lambda: winner.merge_upsert(
             spark.createDataFrame([(2, 99, "b")], "k int, v int, p string"),
             ["p", "k"],
         ),
-    )
-    v = loser.cluster()
-    assert state["raced"]
+    ) as fired:
+        v = loser.cluster()
+    assert fired
     assert _rows(t) == [(1, 10, "a"), (2, 99, "b"), (4, 40, "a")]
     # the rebased commit kept its clustered markers: re-clustering the
     # SAME handle finds only the winner's merge output unclustered
@@ -563,29 +535,12 @@ def test_disjoint_rebase_converges_to_serial(
     w1h = ManagedTable(spark, name, str(tmp / name), partition_columns=["p"])
     w2h = ManagedTable(spark, name, str(tmp / name), partition_columns=["p"])
     loser = ManagedTable(spark, name, str(tmp / name), partition_columns=["p"])
-    orig = loser._write_manifest
-    fired = {"n": 0}
 
-    def interposed(*a, **k):
-        if fired["n"] == 0:
-            fired["n"] = 1
-            w1h.merge_upsert(
-                spark.createDataFrame(
-                    [(100 + w1p, 1000, str(w1p))], "k int, v int, p string"
-                ),
-                ["p", "k"],
-            )
-        elif fired["n"] == 1:
-            fired["n"] = 2
-            w2h.merge_upsert(
-                spark.createDataFrame(
-                    [(100 + w2p, 2000, str(w2p))], "k int, v int, p string"
-                ),
-                ["p", "k"],
-            )
-        return orig(*a, **k)
-
-    loser._write_manifest = interposed
+    def upsert(w, row):
+        return lambda: w.merge_upsert(
+            spark.createDataFrame([row], "k int, v int, p string"),
+            ["p", "k"],
+        )
 
     def apply_winners(state):
         # only winners that actually fired: an overlap with w1 raises
@@ -593,7 +548,7 @@ def test_disjoint_rebase_converges_to_serial(
         state = {r for r in state if r[0] != 100 + w1p} | {
             (100 + w1p, 1000, str(w1p))
         }
-        if fired["n"] == 2:
+        if len(fired) == 2:
             state = {r for r in state if r[0] != 100 + w2p} | {
                 (100 + w2p, 2000, str(w2p))
             }
@@ -607,27 +562,32 @@ def test_disjoint_rebase_converges_to_serial(
         }
 
     disjoint = lp not in (w1p, w2p)
-    try:
-        if loser_deletes:
-            loser.merge_delete(
-                spark.createDataFrame([(lp, str(lp))], "k int, p string"),
-                ["p", "k"],
-                deletion_vectors=False,
-            )
-        else:
-            loser.merge_upsert(
-                spark.createDataFrame(
-                    [(200 + lp, 3000, str(lp))], "k int, v int, p string"
-                ),
-                ["p", "k"],
-            )
-        landed = True
-    except ConcurrentWriteError:
-        landed = False
-    assert fired["n"] >= 1  # the race genuinely happened
+    with race(
+        loser,
+        upsert(w1h, (100 + w1p, 1000, str(w1p))),
+        upsert(w2h, (100 + w2p, 2000, str(w2p))),
+    ) as fired:
+        try:
+            if loser_deletes:
+                loser.merge_delete(
+                    spark.createDataFrame([(lp, str(lp))], "k int, p string"),
+                    ["p", "k"],
+                    deletion_vectors=False,
+                )
+            else:
+                loser.merge_upsert(
+                    spark.createDataFrame(
+                        [(200 + lp, 3000, str(lp))], "k int, v int, p string"
+                    ),
+                    ["p", "k"],
+                )
+            landed = True
+        except ConcurrentWriteError:
+            landed = False
+    assert fired  # the race genuinely happened
     got = {(r.k, r.v, r.p) for r in t.read().collect()}
     if disjoint:
-        assert landed and fired["n"] == 2, (lp, w1p, w2p, loser_deletes)
+        assert landed and len(fired) == 2, (lp, w1p, w2p, loser_deletes)
         assert got == apply_loser(apply_winners(set(base)))
     else:
         assert not landed
@@ -640,20 +600,20 @@ def test_merge_clauses_disjoint_race(spark, tmp_path):
     t = _mk(spark, tmp_path, "mc1")
     loser = _handle(spark, tmp_path, "mc1")
     winner = _handle(spark, tmp_path, "mc1")
-    state = _interpose(
+    with race(
         loser,
         lambda: winner.merge_upsert(
             spark.createDataFrame([(2, 99, "b")], "k int, v int, p string"),
             ["p", "k"],
         ),
-    )
-    loser.merge_clauses(
-        spark.createDataFrame([(1, 77, "a")], "k int, v int, p string"),
-        ["p", "k"],
-        matched=[(None, {"v": "src.v"})],
-        not_matched=[(None, "insert_all")],
-    )
-    assert state["raced"]
+    ) as fired:
+        loser.merge_clauses(
+            spark.createDataFrame([(1, 77, "a")], "k int, v int, p string"),
+            ["p", "k"],
+            matched=[(None, {"v": "src.v"})],
+            not_matched=[(None, "insert_all")],
+        )
+    assert fired
     assert _rows(t) == [(1, 77, "a"), (2, 99, "b"), (3, 30, "c")]
 
 
@@ -666,32 +626,32 @@ def test_dv_delete_winner_attribution(spark, tmp_path):
     # same-partition race: DV delete in 'a' vs merge into 'a'
     loser = _handle(spark, tmp_path, "dv1")
     winner = _handle(spark, tmp_path, "dv1")
-    _interpose(
+    with race(
         loser,
         lambda: winner.delete_where(
             (F.col("p") == "a") & (F.col("k") == 1)  # DV path (default)
         ),
-    )
-    with pytest.raises(ConcurrentWriteError):
+    ) as fired, pytest.raises(ConcurrentWriteError):
         loser.merge_upsert(
             spark.createDataFrame([(9, 90, "a")], "k int, v int, p string"),
             ["p", "k"],
         )
+    assert fired
     assert _rows(t) == [(2, 20, "b"), (3, 30, "c")]  # the DV delete won
     # disjoint: DV delete in 'b' vs merge into 'c' — both land
     loser2 = _handle(spark, tmp_path, "dv1")
     winner2 = _handle(spark, tmp_path, "dv1")
-    state = _interpose(
+    with race(
         loser2,
         lambda: winner2.delete_where(
             (F.col("p") == "b") & (F.col("k") == 2)
         ),
-    )
-    loser2.merge_upsert(
-        spark.createDataFrame([(3, 33, "c")], "k int, v int, p string"),
-        ["p", "k"],
-    )
-    assert state["raced"]
+    ) as fired:
+        loser2.merge_upsert(
+            spark.createDataFrame([(3, 33, "c")], "k int, v int, p string"),
+            ["p", "k"],
+        )
+    assert fired
     assert _rows(t) == [(3, 33, "c")]
 
 
@@ -704,17 +664,17 @@ def test_empty_region_replace_where_races_in_region_append(spark, tmp_path):
     t = _mk(spark, tmp_path, "r_empty")
     loser = _handle(spark, tmp_path, "r_empty")
     winner = _handle(spark, tmp_path, "r_empty")
-    _interpose(
+    with race(
         loser,
         lambda: winner.append(
             spark.createDataFrame([(9, 90, "d")], "k int, v int, p string")
         ),
-    )
-    with pytest.raises(ConcurrentWriteError):
+    ) as fired, pytest.raises(ConcurrentWriteError):
         loser.replace_where(
             spark.createDataFrame([(7, 70, "d")], "k int, v int, p string"),
             [("p", "=", "d")],
         )
+    assert fired
     # the winner's append survives; the loser's replace did not land
     assert (9, 90, "d") in _rows(t)
     assert (7, 70, "d") not in _rows(t)
@@ -763,13 +723,12 @@ def test_scoped_delete_conflicts_with_insert_into_named_empty_partition(
     t = _mk(spark, tmp_path, "scope_empty")
     loser = _handle(spark, tmp_path, "scope_empty")
     winner = _handle(spark, tmp_path, "scope_empty")
-    _interpose(
+    with race(
         loser,
         lambda: winner.append(
             spark.createDataFrame([(9, 90, "z")], "k int, v int, p string")
         ),
-    )
-    with pytest.raises(ConcurrentWriteError):
+    ) as fired, pytest.raises(ConcurrentWriteError):
         loser.merge_delete(
             spark.createDataFrame(
                 [(1, "a"), (9, "z")], "k int, p string"
@@ -777,6 +736,7 @@ def test_scoped_delete_conflicts_with_insert_into_named_empty_partition(
             ["p", "k"],
             deletion_vectors=False,
         )
+    assert fired
     # first writer won; the loser's delete did not half-land
     rows = _rows(t)
     assert (9, 90, "z") in rows and (1, 10, "a") in rows
@@ -821,16 +781,16 @@ def test_rebase_over_vacuumed_winner_raises_concurrent_not_filenotfound(
     loser = _handle(spark, tmp_path, "vacrace")
     winner = _handle(spark, tmp_path, "vacrace")
     winner.retain_versions = 1  # post-commit vacuum deletes old manifests
-    _interpose(
+    with race(
         loser,
         lambda: winner.merge_upsert(
             spark.createDataFrame([(5, 50, "b")], "k int, v int, p string"),
             ["p", "k"],
         ),
-    )
-    with pytest.raises(ConcurrentWriteError):
+    ) as fired, pytest.raises(ConcurrentWriteError):
         loser.merge_upsert(
             spark.createDataFrame([(7, 70, "a")], "k int, v int, p string"),
             ["p", "k"],
         )
+    assert fired
     assert (5, 50, "b") in _rows(t)

@@ -13,6 +13,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from databricks_data_warehouse_spark.scratch import race
 from databricks_data_warehouse_spark.sources.sql_dml import SqlSession
 from databricks_data_warehouse_spark.sources.tables import (
     ConcurrentWriteError,
@@ -40,22 +41,6 @@ def _handle(spark, tmp_path, name):
     return ManagedTable(spark, name, str(tmp_path / name))
 
 
-def _interpose(loser, fire):
-    """Make ``fire()`` run right before the loser's first manifest
-    claim — a REAL version-number collision, not a simulation."""
-    orig = loser._write_manifest
-    state = {"raced": False}
-
-    def interposed(*a, **k):
-        if not state["raced"]:
-            state["raced"] = True
-            fire()
-        return orig(*a, **k)
-
-    loser._write_manifest = interposed
-    return state
-
-
 def _rows(t):
     return sorted((r.k, r.v) for r in t.read().collect())
 
@@ -66,11 +51,11 @@ def test_disjoint_dv_deletes_both_land_unpartitioned(spark, tmp_path):
     t = _mk(spark, tmp_path, "f1")
     loser = _handle(spark, tmp_path, "f1")
     winner = _handle(spark, tmp_path, "f1")
-    state = _interpose(
+    with race(
         loser, lambda: winner.delete_where(F.col("k") == 105)
-    )
-    v = loser.delete_where(F.col("k") == 3, read_filters=[[("k", "=", 3)]])
-    assert state["raced"]
+    ) as fired:
+        v = loser.delete_where(F.col("k") == 3, read_filters=[[("k", "=", 3)]])
+    assert fired
     assert v == loser.current_version() == 3  # v1 base, v2 winner, v3 loser
     assert _rows(t) == sorted(
         (k, k * 10) for k in list(range(10)) + list(range(100, 110))
@@ -84,9 +69,11 @@ def test_overlapping_dv_deletes_raise(spark, tmp_path):
     t = _mk(spark, tmp_path, "f2")
     loser = _handle(spark, tmp_path, "f2")
     winner = _handle(spark, tmp_path, "f2")
-    _interpose(loser, lambda: winner.delete_where(F.col("k") == 2))
-    with pytest.raises(ConcurrentWriteError):
+    with race(
+        loser, lambda: winner.delete_where(F.col("k") == 2)
+    ) as fired, pytest.raises(ConcurrentWriteError):
         loser.delete_where(F.col("k") == 3, read_filters=[[("k", "=", 3)]])
+    assert fired
     # the winner landed; the loser aborted cleanly
     assert (2, 20) not in _rows(t) and (3, 30) in _rows(t)
 
@@ -98,15 +85,15 @@ def test_blind_append_never_conflicts_with_dv_delete(spark, tmp_path):
     t = _mk(spark, tmp_path, "f3")
     loser = _handle(spark, tmp_path, "f3")
     winner = _handle(spark, tmp_path, "f3")
-    state = _interpose(
+    with race(
         loser,
         lambda: winner.append(
             spark.createDataFrame([(3, 999)], "k long, v long")
         ),
-    )
-    # no read_filters: predicate unknown — blind appends are exempt
-    v = loser.delete_where(F.col("k") == 3)
-    assert state["raced"] and v == loser.current_version()
+    ) as fired:
+        # no read_filters: predicate unknown — blind appends are exempt
+        v = loser.delete_where(F.col("k") == 3)
+    assert fired and v == loser.current_version()
     # old k=3 deleted; the appended k=3 survives (append second)
     assert (3, 999) in _rows(t) and (3, 30) not in _rows(t)
 
@@ -119,14 +106,14 @@ def test_nonblind_add_matching_predicate_raises(spark, tmp_path):
     loser = _handle(spark, tmp_path, "f4")
     winner = _handle(spark, tmp_path, "f4")
     # winner rewrites k=105 to k=5-range territory (v stays distinct)
-    _interpose(
+    with race(
         loser,
         lambda: winner.update_where({"k": "5"}, F.col("k") == 105),
-    )
-    with pytest.raises(ConcurrentWriteError):
+    ) as fired, pytest.raises(ConcurrentWriteError):
         loser.delete_where(
             F.col("k") <= 9, read_filters=[[("k", "<=", 9)]]
         )
+    assert fired
     assert (5, 1050) in _rows(t)  # the winner landed
 
 
@@ -136,18 +123,18 @@ def test_nonblind_add_outside_predicate_rebases(spark, tmp_path):
     t = _mk(spark, tmp_path, "f5")
     loser = _handle(spark, tmp_path, "f5")
     winner = _handle(spark, tmp_path, "f5")
-    state = _interpose(
+    with race(
         loser,
         lambda: winner.update_where(
             {"v": "v + 1"},
             F.col("k") == 105,
             read_filters=[[("k", "=", 105)]],
         ),
-    )
-    v = loser.delete_where(
-        F.col("k") == 3, read_filters=[[("k", "=", 3)]]
-    )
-    assert state["raced"] and v == loser.current_version()
+    ) as fired:
+        v = loser.delete_where(
+            F.col("k") == 3, read_filters=[[("k", "=", 3)]]
+        )
+    assert fired and v == loser.current_version()
     rows = _rows(t)
     assert (3, 30) not in rows and (105, 1051) in rows
 
@@ -160,12 +147,12 @@ def test_dv_delete_without_predicate_conflicts_with_nonblind_add(
     t = _mk(spark, tmp_path, "f6")
     loser = _handle(spark, tmp_path, "f6")
     winner = _handle(spark, tmp_path, "f6")
-    _interpose(
+    with race(
         loser,
         lambda: winner.update_where({"v": "v + 1"}, F.col("k") == 105),
-    )
-    with pytest.raises(ConcurrentWriteError):
+    ) as fired, pytest.raises(ConcurrentWriteError):
         loser.delete_where(F.col("k") == 3)
+    assert fired
     assert (105, 1051) in _rows(t)
 
 
@@ -175,18 +162,18 @@ def test_disjoint_dv_updates_both_land(spark, tmp_path):
     t = _mk(spark, tmp_path, "f7")
     loser = _handle(spark, tmp_path, "f7")
     winner = _handle(spark, tmp_path, "f7")
-    state = _interpose(
+    with race(
         loser,
         lambda: winner.update_where(
             {"v": "v + 1"},
             F.col("k") == 105,
             read_filters=[[("k", "=", 105)]],
         ),
-    )
-    v = loser.update_where(
-        {"v": "v + 2"}, F.col("k") == 3, read_filters=[[("k", "=", 3)]]
-    )
-    assert state["raced"] and v == loser.current_version()
+    ) as fired:
+        v = loser.update_where(
+            {"v": "v + 2"}, F.col("k") == 3, read_filters=[[("k", "=", 3)]]
+        )
+    assert fired and v == loser.current_version()
     rows = dict(_rows(t))
     assert rows[3] == 32 and rows[105] == 1051
 
@@ -197,14 +184,14 @@ def test_metadata_flip_mid_flight_refuses_file_rebase(spark, tmp_path):
     t = _mk(spark, tmp_path, "f8")
     loser = _handle(spark, tmp_path, "f8")
     winner = _handle(spark, tmp_path, "f8")
-    _interpose(
+    with race(
         loser,
         lambda: winner.set_properties({"delta.appendOnly": "true"}),
-    )
-    with pytest.raises(ConcurrentWriteError):
+    ) as fired, pytest.raises(ConcurrentWriteError):
         loser.delete_where(
             F.col("k") == 3, read_filters=[[("k", "=", 3)]]
         )
+    assert fired
     assert (3, 30) in _rows(t)  # nothing deleted
 
 
@@ -216,18 +203,18 @@ def test_sql_dml_derives_read_filters(spark, tmp_path):
     sess.register(t)
     loser = _handle(spark, tmp_path, "f9")
     winner = _handle(spark, tmp_path, "f9")
-    state = _interpose(
+    with race(
         loser,
         lambda: winner.update_where(
             {"v": "v + 1"},
             F.col("k") == 105,
             read_filters=[[("k", "=", 105)]],
         ),
-    )
-    sess_loser = SqlSession(spark)
-    sess_loser.register(loser, "t9")
-    sess_loser.sql("DELETE FROM t9 WHERE k = 3")
-    assert state["raced"]
+    ) as fired:
+        sess_loser = SqlSession(spark)
+        sess_loser.register(loser, "t9")
+        sess_loser.sql("DELETE FROM t9 WHERE k = 3")
+    assert fired
     rows = _rows(t)
     assert (3, 30) not in rows and (105, 1051) in rows
 
@@ -420,18 +407,18 @@ def test_disjoint_cow_deletes_both_land_unpartitioned(spark, tmp_path):
     t = _mk(spark, tmp_path, "cw4")
     loser = _handle(spark, tmp_path, "cw4")
     winner = _handle(spark, tmp_path, "cw4")
-    state = _interpose(
+    with race(
         loser,
         lambda: winner.delete_where(
             F.col("k") == 105, deletion_vectors=False
         ),
-    )
-    loser.delete_where(
-        F.col("k") == 3,
-        deletion_vectors=False,
-        read_filters=[[("k", "=", 3)]],
-    )
-    assert state["raced"]
+    ) as fired:
+        loser.delete_where(
+            F.col("k") == 3,
+            deletion_vectors=False,
+            read_filters=[[("k", "=", 3)]],
+        )
+    assert fired
     assert _rows(t) == sorted(
         (k, k * 10) for k in list(range(10)) + list(range(100, 110))
         if k not in (3, 105)
@@ -444,19 +431,19 @@ def test_overlapping_cow_deletes_raise(spark, tmp_path):
     t = _mk(spark, tmp_path, "cw5")
     loser = _handle(spark, tmp_path, "cw5")
     winner = _handle(spark, tmp_path, "cw5")
-    state = _interpose(
+    with race(
         loser,
         lambda: winner.delete_where(
             F.col("k") == 2, deletion_vectors=False
         ),
-    )
-    with pytest.raises(ConcurrentWriteError):
-        loser.delete_where(
-            F.col("k") == 3,
-            deletion_vectors=False,
-            read_filters=[[("k", "=", 3)]],
-        )
-    assert state["raced"]
+    ) as fired:
+        with pytest.raises(ConcurrentWriteError):
+            loser.delete_where(
+                F.col("k") == 3,
+                deletion_vectors=False,
+                read_filters=[[("k", "=", 3)]],
+            )
+    assert fired
     assert (2, 20) not in _rows(t) and (3, 30) in _rows(t)
 
 
@@ -466,18 +453,18 @@ def test_cow_delete_rebases_over_blind_append(spark, tmp_path):
     t = _mk(spark, tmp_path, "cw6")
     loser = _handle(spark, tmp_path, "cw6")
     winner = _handle(spark, tmp_path, "cw6")
-    state = _interpose(
+    with race(
         loser,
         lambda: winner.append(
             spark.createDataFrame([(999, 9990)], "k long, v long")
         ),
-    )
-    loser.delete_where(
-        F.col("k") == 3,
-        deletion_vectors=False,
-        read_filters=[[("k", "=", 3)]],
-    )
-    assert state["raced"]
+    ) as fired:
+        loser.delete_where(
+            F.col("k") == 3,
+            deletion_vectors=False,
+            read_filters=[[("k", "=", 3)]],
+        )
+    assert fired
     got = _rows(t)
     assert (999, 9990) in got and (3, 30) not in got and len(got) == 20
 
@@ -488,16 +475,16 @@ def test_cow_delete_mixed_race_with_dv_delete(spark, tmp_path):
     t = _mk(spark, tmp_path, "cw7")
     loser = _handle(spark, tmp_path, "cw7")
     winner = _handle(spark, tmp_path, "cw7")
-    state = _interpose(
+    with race(
         loser,
         lambda: winner.delete_where(F.col("k") == 107),  # DV path
-    )
-    loser.delete_where(
-        F.col("k") == 1,
-        deletion_vectors=False,
-        read_filters=[[("k", "=", 1)]],
-    )
-    assert state["raced"]
+    ) as fired:
+        loser.delete_where(
+            F.col("k") == 1,
+            deletion_vectors=False,
+            read_filters=[[("k", "=", 1)]],
+        )
+    assert fired
     assert _rows(t) == sorted(
         (k, k * 10) for k in list(range(10)) + list(range(100, 110))
         if k not in (1, 107)
@@ -532,18 +519,18 @@ def test_sparse_key_merge_rebases_over_mid_range_rewrite(spark, tmp_path):
     t = _mk(spark, tmp_path, "sp1")
     loser = _handle(spark, tmp_path, "sp1")
     winner = _handle(spark, tmp_path, "sp1")
-    state = _interpose(
+    with race(
         loser,
         lambda: winner.update_where({"v": "v + 1"}, F.col("k") == 105),
-    )
-    loser.merge_clauses(
-        spark.createDataFrame([(2, 222), (999, 9990)], "k long, v long"),
-        ["k"],
-        matched=[(None, {"v": "src.v"})],
-        not_matched=[(None, "insert_all")],
-        deletion_vectors=True,
-    )
-    assert state["raced"]
+    ) as fired:
+        loser.merge_clauses(
+            spark.createDataFrame([(2, 222), (999, 9990)], "k long, v long"),
+            ["k"],
+            matched=[(None, {"v": "src.v"})],
+            not_matched=[(None, "insert_all")],
+            deletion_vectors=True,
+        )
+    assert fired
     got = dict(_rows(t))
     assert got[105] == 1051  # winner landed
     assert got[2] == 222 and got[999] == 9990  # loser rebased, both in
@@ -592,18 +579,18 @@ def test_above_cap_sparse_keys_rebase_via_bloom(spark, tmp_path):
     t = _mk(spark, tmp_path, "kb1")
     loser = _handle(spark, tmp_path, "kb1")
     winner = _handle(spark, tmp_path, "kb1")
-    state = _interpose(
+    with race(
         loser,
         lambda: winner.update_where({"v": "v + 1"}, F.col("k") == 105),
-    )
-    loser.merge_clauses(
-        _big_sparse_source(spark),
-        ["k"],
-        matched=[(None, {"v": "src.v"})],
-        not_matched=[(None, "insert_all")],
-        deletion_vectors=True,
-    )
-    assert state["raced"]
+    ) as fired:
+        loser.merge_clauses(
+            _big_sparse_source(spark),
+            ["k"],
+            matched=[(None, {"v": "src.v"})],
+            not_matched=[(None, "insert_all")],
+            deletion_vectors=True,
+        )
+    assert fired
     got = dict(_rows(t))
     assert got[105] == 1051  # winner landed
     assert got[2] == 222 and got[999] == 9990  # loser rebased
@@ -618,7 +605,7 @@ def test_above_cap_keys_conflict_when_add_contains_key(spark, tmp_path):
     t = _mk(spark, tmp_path, "kb2")
     loser = _handle(spark, tmp_path, "kb2")
     winner = _handle(spark, tmp_path, "kb2")
-    state = _interpose(
+    with race(
         loser,
         lambda: winner.merge_clauses(
             spark.createDataFrame([(10002, 111)], "k long, v long"),
@@ -626,16 +613,16 @@ def test_above_cap_keys_conflict_when_add_contains_key(spark, tmp_path):
             not_matched=[(None, "insert_all")],
             deletion_vectors=True,
         ),
-    )
-    with pytest.raises(ConcurrentWriteError):
-        loser.merge_clauses(
-            _big_sparse_source(spark),
-            ["k"],
-            matched=[(None, {"v": "src.v"})],
-            not_matched=[(None, "insert_all")],
-            deletion_vectors=True,
-        )
-    assert state["raced"]
+    ) as fired:
+        with pytest.raises(ConcurrentWriteError):
+            loser.merge_clauses(
+                _big_sparse_source(spark),
+                ["k"],
+                matched=[(None, {"v": "src.v"})],
+                not_matched=[(None, "insert_all")],
+                deletion_vectors=True,
+            )
+    assert fired
     assert dict(_rows(t))[10002] == 111  # only the winner landed
 
 
@@ -688,21 +675,21 @@ def test_disjoint_cow_merges_both_land_unpartitioned(spark, tmp_path):
     t = _mk(spark, tmp_path, "cm2")
     loser = _handle(spark, tmp_path, "cm2")
     winner = _handle(spark, tmp_path, "cm2")
-    state = _interpose(
+    with race(
         loser,
         lambda: winner.merge_clauses(
             spark.createDataFrame([(105, 1055)], "k long, v long"),
             ["k"],
             matched=[(None, {"v": "src.v"})],
         ),
-    )
-    loser.merge_clauses(
-        spark.createDataFrame([(3, 333), (999, 9990)], "k long, v long"),
-        ["k"],
-        matched=[(None, {"v": "src.v"})],
-        not_matched=[(None, "insert_all")],
-    )
-    assert state["raced"]
+    ) as fired:
+        loser.merge_clauses(
+            spark.createDataFrame([(3, 333), (999, 9990)], "k long, v long"),
+            ["k"],
+            matched=[(None, {"v": "src.v"})],
+            not_matched=[(None, "insert_all")],
+        )
+    assert fired
     got = dict(_rows(t))
     assert got[105] == 1055 and got[3] == 333 and got[999] == 9990
     assert len(got) == 21

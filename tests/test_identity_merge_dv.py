@@ -11,6 +11,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from databricks_data_warehouse_spark.scratch import race
 from databricks_data_warehouse_spark.sources.tables import (
     ConcurrentWriteError,
     ManagedTable,
@@ -42,20 +43,6 @@ def _handle(spark, tmp_path, name):
     return ManagedTable(spark, name, str(tmp_path / name))
 
 
-def _interpose(loser, fire):
-    orig = loser._write_manifest
-    state = {"raced": False}
-
-    def interposed(*a, **k):
-        if not state["raced"]:
-            state["raced"] = True
-            fire()
-        return orig(*a, **k)
-
-    loser._write_manifest = interposed
-    return state
-
-
 def _src(spark, rows):
     return spark.createDataFrame(rows, "k long, v double").coalesce(1)
 
@@ -73,17 +60,17 @@ def test_dv_identity_merge_rebases_over_nonminting_writer(
     t = _mk(spark, tmp_path, "im1")
     loser = _handle(spark, tmp_path, "im1")
     winner = _handle(spark, tmp_path, "im1")
-    state = _interpose(
+    with race(
         loser, lambda: winner.delete_where(F.col("k") == 52)
-    )
-    loser.merge_clauses(
-        _src(spark, [(1, 11.0), (200, 200.0)]),
-        ["k"],
-        matched=[(None, {"v": "src.v"})],
-        not_matched=[(None, "insert_all")],
-        deletion_vectors=True,
-    )
-    assert state["raced"]
+    ) as fired:
+        loser.merge_clauses(
+            _src(spark, [(1, 11.0), (200, 200.0)]),
+            ["k"],
+            matched=[(None, {"v": "src.v"})],
+            not_matched=[(None, "insert_all")],
+            deletion_vectors=True,
+        )
+    assert fired
     rows = {r.k: (r.id, r.v) for r in t.read().collect()}
     assert 52 not in rows  # winner landed
     assert rows[1] == (101, 11.0)  # rewrite kept its id
@@ -98,18 +85,18 @@ def test_dv_identity_merge_reminted_after_racing_mint(spark, tmp_path):
     t = _mk(spark, tmp_path, "im2")
     loser = _handle(spark, tmp_path, "im2")
     winner = _handle(spark, tmp_path, "im2")
-    state = _interpose(
+    with race(
         loser,
         lambda: winner.append(_src(spark, [(300, 300.0)])),
-    )
-    with pytest.raises(ConcurrentWriteError, match="watermark moved"):
-        loser.merge_clauses(
-            _src(spark, [(400, 400.0)]),
-            ["k"],
-            not_matched=[(None, "insert_all")],
-            deletion_vectors=True,
-        )
-    assert state["raced"]
+    ) as fired:
+        with pytest.raises(ConcurrentWriteError, match="watermark moved"):
+            loser.merge_clauses(
+                _src(spark, [(400, 400.0)]),
+                ["k"],
+                not_matched=[(None, "insert_all")],
+                deletion_vectors=True,
+            )
+    assert fired
     # re-run on a fresh handle: fresh ids, no collision with winner's
     retry = _handle(spark, tmp_path, "im2")
     retry.merge_clauses(
@@ -132,11 +119,11 @@ def test_identity_append_rebases_over_nonminting_writer(spark, tmp_path):
     t = _mk(spark, tmp_path, "im3")
     loser = _handle(spark, tmp_path, "im3")
     winner = _handle(spark, tmp_path, "im3")
-    state = _interpose(
+    with race(
         loser, lambda: winner.delete_where(F.col("k") == 0)
-    )
-    loser.append(_src(spark, [(500, 500.0)]))
-    assert state["raced"]
+    ) as fired:
+        loser.append(_src(spark, [(500, 500.0)]))
+    assert fired
     rows = {r.k: r.id for r in t.read().collect()}
     assert 0 not in rows
     assert rows[500] == 110
@@ -148,12 +135,12 @@ def test_identity_append_race_loser_remints(spark, tmp_path):
     t = _mk(spark, tmp_path, "im4")
     loser = _handle(spark, tmp_path, "im4")
     winner = _handle(spark, tmp_path, "im4")
-    state = _interpose(
+    with race(
         loser, lambda: winner.append(_src(spark, [(600, 600.0)]))
-    )
-    with pytest.raises(ConcurrentWriteError, match="watermark moved"):
-        loser.append(_src(spark, [(700, 700.0)]))
-    assert state["raced"]
+    ) as fired:
+        with pytest.raises(ConcurrentWriteError, match="watermark moved"):
+            loser.append(_src(spark, [(700, 700.0)]))
+    assert fired
     retry = _handle(spark, tmp_path, "im4")
     retry.append(_src(spark, [(700, 700.0)]))
     ids = _ids(t)

@@ -12,6 +12,7 @@ names prove the route).
 import pytest
 from pyspark.sql import functions as F
 
+from databricks_data_warehouse_spark.scratch import race
 from databricks_data_warehouse_spark.sources.sql_dml import SqlSession
 from databricks_data_warehouse_spark.sources.tables import ManagedTable
 
@@ -484,28 +485,19 @@ def test_dv_merges_disjoint_keys_race_unpartitioned(spark, tmp_path):
     )
     loser = ManagedTable(spark, name, str(tmp_path / name))
     winner = ManagedTable(spark, name, str(tmp_path / name))
-    orig = loser._write_manifest
-    state = {"raced": False}
-
-    def interposed(*a, **kw):
-        if not state["raced"]:
-            state["raced"] = True
-            winner.merge_clauses(
-                spark.createDataFrame([(105, "w", 5.0)], "k long, s string, v double"),
-                ["k"],
-                matched=[(None, {"s": "src.s", "v": "src.v"})],
-                deletion_vectors=True,
-            )
-        return orig(*a, **kw)
-
-    loser._write_manifest = interposed
-    v = loser.merge_clauses(
-        spark.createDataFrame([(3, "l", 3.0)], "k long, s string, v double"),
+    with race(loser, lambda: winner.merge_clauses(
+        spark.createDataFrame([(105, "w", 5.0)], "k long, s string, v double"),
         ["k"],
         matched=[(None, {"s": "src.s", "v": "src.v"})],
         deletion_vectors=True,
-    )
-    assert state["raced"] and v == loser.current_version()
+    )) as fired:
+        v = loser.merge_clauses(
+            spark.createDataFrame([(3, "l", 3.0)], "k long, s string, v double"),
+            ["k"],
+            matched=[(None, {"s": "src.s", "v": "src.v"})],
+            deletion_vectors=True,
+        )
+    assert fired and v == loser.current_version()
     got = {r["k"]: (r["s"], r["v"]) for r in t.read().collect()}
     assert got[3] == ("l", 3.0) and got[105] == ("w", 5.0)
     assert len(got) == 20

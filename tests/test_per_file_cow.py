@@ -15,6 +15,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from databricks_data_warehouse_spark.scratch import race
 from databricks_data_warehouse_spark.sources.tables import (
     ConcurrentWriteError,
     ManagedTable,
@@ -59,20 +60,6 @@ def _mk_one_entry(spark, tmp_path, name):
 
 def _handle(spark, tmp_path, name):
     return ManagedTable(spark, name, str(tmp_path / name))
-
-
-def _interpose(loser, fire):
-    orig = loser._write_manifest
-    state = {"raced": False}
-
-    def interposed(*a, **k):
-        if not state["raced"]:
-            state["raced"] = True
-            fire()
-        return orig(*a, **k)
-
-    loser._write_manifest = interposed
-    return state
 
 
 def _rows(t):
@@ -126,18 +113,18 @@ def test_same_entry_disjoint_cow_deletes_both_land(spark, tmp_path):
     t = _mk_one_entry(spark, tmp_path, "pf3")
     loser = _handle(spark, tmp_path, "pf3")
     winner = _handle(spark, tmp_path, "pf3")
-    state = _interpose(
+    with race(
         loser,
         lambda: winner.delete_where(
             F.col("k") == 105, deletion_vectors=False
         ),
-    )
-    loser.delete_where(
-        F.col("k") == 3,
-        deletion_vectors=False,
-        read_filters=[[("k", "=", 3)]],
-    )
-    assert state["raced"]
+    ) as fired:
+        loser.delete_where(
+            F.col("k") == 3,
+            deletion_vectors=False,
+            read_filters=[[("k", "=", 3)]],
+        )
+    assert fired
     assert _rows(t) == _all_keys({3, 105})
 
 
@@ -147,19 +134,19 @@ def test_same_entry_same_file_cow_deletes_raise(spark, tmp_path):
     t = _mk_one_entry(spark, tmp_path, "pf4")
     loser = _handle(spark, tmp_path, "pf4")
     winner = _handle(spark, tmp_path, "pf4")
-    state = _interpose(
+    with race(
         loser,
         lambda: winner.delete_where(
             F.col("k") == 2, deletion_vectors=False
         ),
-    )
-    with pytest.raises(ConcurrentWriteError):
-        loser.delete_where(
-            F.col("k") == 3,
-            deletion_vectors=False,
-            read_filters=[[("k", "=", 3)]],
-        )
-    assert state["raced"]
+    ) as fired:
+        with pytest.raises(ConcurrentWriteError):
+            loser.delete_where(
+                F.col("k") == 3,
+                deletion_vectors=False,
+                read_filters=[[("k", "=", 3)]],
+            )
+    assert fired
     assert (2, 20) not in _rows(t) and (3, 30) in _rows(t)
 
 
@@ -169,21 +156,21 @@ def test_same_entry_disjoint_cow_merges_both_land(spark, tmp_path):
     t = _mk_one_entry(spark, tmp_path, "pf5")
     loser = _handle(spark, tmp_path, "pf5")
     winner = _handle(spark, tmp_path, "pf5")
-    state = _interpose(
+    with race(
         loser,
         lambda: winner.merge_clauses(
             spark.createDataFrame([(105, 1055)], "k long, v long"),
             ["k"],
             matched=[(None, {"v": "src.v"})],
         ),
-    )
-    loser.merge_clauses(
-        spark.createDataFrame([(3, 333), (999, 9990)], "k long, v long"),
-        ["k"],
-        matched=[(None, {"v": "src.v"})],
-        not_matched=[(None, "insert_all")],
-    )
-    assert state["raced"]
+    ) as fired:
+        loser.merge_clauses(
+            spark.createDataFrame([(3, 333), (999, 9990)], "k long, v long"),
+            ["k"],
+            matched=[(None, {"v": "src.v"})],
+            not_matched=[(None, "insert_all")],
+        )
+    assert fired
     got = dict(_rows(t))
     assert got[105] == 1055 and got[3] == 333 and got[999] == 9990
     assert len(got) == 21
